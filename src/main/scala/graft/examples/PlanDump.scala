@@ -30,17 +30,18 @@ object PlanDump {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // pinned-subplan capture: a Materialize.pin cuts the top-level plan
+    // at an ExistingRDD scan, hiding everything the pin job itself ran
+    // (e.g. the PPJoin verification joins) — capture those too, unless
+    // SPARK_GRAFT_CONFS (applied after) turns it off
+    spark.conf.set(graft.ext.Materialize.CapturePinsConf, "true")
     sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     })
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    // pinned-subplan capture: a Materialize.pin cuts the top-level plan
-    // at an ExistingRDD scan, hiding everything the pin job itself ran
-    // (e.g. the PPJoin verification joins) — capture those too
-    spark.conf.set(graft.ext.Materialize.CapturePinsConf, "true")
     names.foreach { name =>
-      graft.ext.Materialize.drainCapturedPlans() // clear prior query's
+      graft.ext.Materialize.drainCapturedPlans(spark) // clear prior query's
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       // collect() (not count()) so the action runs THIS queryExecution
       // and the dumped executedPlan is the AQE-final one — count()
@@ -55,9 +56,9 @@ object PlanDump {
         .split("== Initial Plan ==")(0)
       // eager pins ran during query construction and during collect();
       // one drain here gathers both
-      val pins = graft.ext.Materialize.drainCapturedPlans()
+      val pins = graft.ext.Materialize.drainCapturedPlans(spark)
         .zipWithIndex.map { case (p, i) =>
-          s"== pinned subplan ${i + 1} (Materialize.pin) ==\n$p\n" }
+          s"== pinned subplan ${i + 1} (Materialize) ==\n$p\n" }
         .mkString
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),

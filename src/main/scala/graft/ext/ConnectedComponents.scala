@@ -47,21 +47,14 @@ object ConnectedComponents {
     // LSH band edges — measured r17: 33 cached partitions for a ~20k-row
     // edge table, ~70 tasks per round job on q_dedup_clusters), which is
     // pure task-launch overhead round after round. Derive the width from
-    // the PLAN-estimated size instead (one partition per ~2 MB, clamped
-    // to [1, defaultParallelism]) — the same scale-adaptive posture as
-    // FanOut.fanOutSized: a billion-edge graph still gets full width,
-    // a banding graph gets a handful of tasks per round.
+    // the PLAN-estimated size instead (VertexLoop.sizedWidth) — the same
+    // scale-adaptive posture as FanOut.fanOutSized: a billion-edge graph
+    // still gets full width, a banding graph a handful of tasks per round.
     val symRaw = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-    val symWidth = {
-      val est = symRaw.queryExecution.optimizedPlan.stats.sizeInBytes
-      val para = nodes.sparkSession.sparkContext.defaultParallelism
-      val byBytes = (est / (2L << 20)).toLong
-      math.max(1L, math.min(para.toLong, byBytes)).toInt
-    }
     val sym = symRaw
-      .repartition(symWidth, col("a"))
+      .repartition(VertexLoop.sizedWidth(symRaw), col("a"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // The label universe must cover every id the edges mention: an
     // endpoint missing from `nodes` would otherwise never receive a
@@ -85,11 +78,10 @@ object ConnectedComponents {
     // re-shuffle their inputs every round — including the persisted
     // edge table, whose partitioning a pin cannot carry across jobs.
     // Hinting the label table as the SMALL side (broadcast while it
-    // fits, shuffle_hash beyond — Iterate.smallSide, same regime
-    // switch as PageRank) keeps the edges in place: per-round data
-    // movement drops to the min-label aggregation itself. The label
-    // row count is CONSTANT across rounds (the id universe), so one
-    // estimate serves the whole loop.
+    // fits, shuffle_hash beyond — Iterate.smallSide) keeps the edges
+    // in place: per-round data movement drops to the min-label
+    // aggregation itself. The label row count is CONSTANT across
+    // rounds (the id universe), so one estimate serves the whole loop.
     val nIds = labels.count()
     // the bare pin of the CURRENT round, releasable once superseded
     // (labels itself becomes a projection over it after round 1)

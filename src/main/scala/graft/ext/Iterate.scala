@@ -30,6 +30,12 @@ import org.apache.spark.sql.DataFrame
   * predicate sees (previous, current) and should be a cheap
   * distributed check (count of changed rows, not a collect of the
   * frames).
+  *
+  * Every round here is a fresh Catalyst plan: analysis, optimization,
+  * AQE re-planning and a job per exchange, which dominates a round over
+  * a small frame. Iterations that pass messages along a fixed edge set
+  * (PageRank, BFS) run on [[VertexLoop]] instead — edges co-partitioned
+  * once, one job per round, no per-round planning.
   */
 object Iterate {
 
@@ -44,9 +50,10 @@ object Iterate {
     * `broadcast()` a rank/frontier table that outgrows driver memory
     * (billions of nodes) would OOM the driver. This is the automatic
     * switch between the two regimes — callers pass a cheap upper-bound
-    * row estimate (node count, computed once per query, constant
-    * across rounds), mirroring how the reference runs bulk iterations
-    * on the shuffle plane when the solution set is large
+    * row estimate (e.g. the label count in ConnectedComponents,
+    * computed once, constant across rounds), mirroring how the
+    * reference runs bulk iterations on the shuffle plane when the
+    * solution set is large
     * (flink-java .../operators/IterativeDataSet.java).
     *
     * `bytesPerRow` defaults to 64: a broadcast hashed relation of two

@@ -1,6 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Single materialization point for every graft operator that needs an
   * eager, lineage-cutting pin (iterative loops whose plans would grow
@@ -24,6 +28,10 @@ import org.apache.spark.sql.DataFrame
   *    shared filesystem path on a real cluster); set
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` or use a
   *    job-scoped directory so checkpoint files do not accumulate.
+  *
+  * [[pin]] pins a DataFrame with its own eager job; [[pinRdd]] pins an
+  * RDD inside the caller's next action, so an RDD-level operator (the
+  * rounds of [[VertexLoop]]) pays no separate pin job.
   */
 object Materialize {
 
@@ -31,40 +39,66 @@ object Materialize {
 
   /** When `spark.graft.plans.capturePins=true` (default off — evidence
     * tooling only, zero work on query paths otherwise), every [[pin]]
-    * also appends the pinned frame's FORMATTED explain to this buffer.
+    * also appends the pinned frame's FORMATTED explain, and every
+    * [[pinRdd]] the pinned RDD's lineage, to its session's buffer.
     * A top-level `explain` stops at the pin's ExistingRDD scan, so the
     * subplan a pin materializes — where optimizations inside operators
     * like JaccardJoin.selfJoin live — is otherwise invisible to the
     * committed plan artifacts. Drained by [[drainCapturedPlans]]
-    * (PlanDump appends the sections to its output files). */
+    * (PlanDump appends the sections to its output files). The buffer
+    * is per SparkSession, so sessions pinning concurrently never see
+    * each other's plans, and it dies with its session. */
   val CapturePinsConf = "spark.graft.plans.capturePins"
 
   private val captured =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
+    graft.SessionCaches.newRegistry[ConcurrentLinkedQueue[String]]()
 
-  /** Drain and return every subplan captured since the last drain. */
-  def drainCapturedPlans(): Seq[String] = {
+  private def capture(spark: SparkSession, plan: => String): Unit =
+    if (spark.conf.get(CapturePinsConf, "false").toBoolean)
+      graft.SessionCaches.perSession(captured, spark)(
+        new ConcurrentLinkedQueue[String]).add(plan): Unit
+
+  private def reliable(spark: SparkSession): Boolean =
+    spark.conf.get(ReliableConf, "false").toBoolean
+
+  /** Drain and return every subplan `spark` captured since its last
+    * drain. */
+  def drainCapturedPlans(spark: SparkSession): Seq[String] = {
     val out = Seq.newBuilder[String]
-    var s = captured.poll()
-    while (s != null) { out += s; s = captured.poll() }
+    Option(captured.get(spark)).foreach { q =>
+      var s = q.poll()
+      while (s != null) { out += s; s = q.poll() }
+    }
     out.result()
   }
 
   /** Eagerly materialize `df` and cut its lineage (see object docs for
     * the local-vs-reliable trade-off). */
   def pin(df: DataFrame): DataFrame = {
-    val reliable =
-      df.sparkSession.conf.get(ReliableConf, "false").toBoolean
     val pinned =
-      if (reliable) df.checkpoint(eager = true)
+      if (reliable(df.sparkSession)) df.checkpoint(eager = true)
       else df.localCheckpoint(eager = true)
-    if (df.sparkSession.conf.get(CapturePinsConf, "false").toBoolean) {
-      // after the eager checkpoint the adaptive plan is final, so this
-      // is the plan the pin job actually ran
-      captured.add(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
+    // after the eager checkpoint the adaptive plan is final, so this
+    // is the plan the pin job actually ran
+    capture(df.sparkSession, df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     pinned
+  }
+
+  /** Mark `rdd` as a pin in `spark`'s checkpoint mode, then run
+    * `action` over it: the action's job computes the partitions and the
+    * pin keeps them, cutting the lineage once the job ends (local mode
+    * adds no job; reliable mode adds the checkpoint-write job, which
+    * reads the persisted blocks instead of recomputing). Returns the
+    * action's result; `rdd` is the pin from then on, released with
+    * `rdd.unpersist()`. */
+  def pinRdd[T, R](spark: SparkSession, rdd: RDD[T])(action: RDD[T] => R): R = {
+    if (reliable(spark)) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    capture(spark, rdd.toDebugString)
+    action(rdd)
   }
 
   /** Deterministically drop a pinned frame's blocks, for operators that

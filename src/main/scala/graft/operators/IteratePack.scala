@@ -1,152 +1,111 @@
 package graft.operators
 
 import graft.{QueryPack, Tables => T}
-import graft.ext.{Iterate, Materialize}
+import graft.ext.VertexLoop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative dataflow (SURVEY.md §2.13 iterations row; reference
-  * flink-streaming-java .../api/datastream/IterativeStream.java,
-  * flink-java .../operators/IterativeDataSet.java — previously the one
-  * declared-out-of-scope §2.13 row; graft.ext.Iterate closes it).
+  * flink-java .../operators/DeltaIteration.java and IterativeDataSet.java
+  * — previously the one declared-out-of-scope §2.13 row).
   *
   * Both queries run on the bipartite part<->supplier graph read
   * straight off lineitem (suppliers offset by +100000 so the id
   * spaces cannot collide), symmetrized so every node has in- and
-  * out-edges — one scan, one distinct, no join, so the per-run cost
-  * is the iteration itself, not graph construction. All iteration
-  * arithmetic is INTEGER (micro-rank units, floor division) so Spark
-  * and the DuckDB recursive-CTE oracle agree bit-for-bit — float
-  * PageRank would hash-diverge on summation order.
+  * out-edges — one scan, no join, so the per-run cost is the iteration
+  * itself, not graph construction. All iteration arithmetic is INTEGER
+  * (micro-rank units, floor division) so Spark and the DuckDB
+  * recursive-CTE oracle agree bit-for-bit — float PageRank would
+  * hash-diverge on summation order.
   *
-  * Scale shape — the big side never moves: the edge table is built
-  * and pinned ONCE, and each round hints the rank/distance table as
-  * the SMALL join side via [[Iterate.smallSide]] (rank rows = one per
-  * node, orders of magnitude smaller than edges): while the node
-  * count × 64 B fits `spark.sql.autoBroadcastJoinThreshold` it is
-  * BROADCAST, so the edges are streamed in place with map-side
-  * partial aggregation and the only per-round shuffle is the reduced
-  * per-node contribution table — the algorithm's intrinsic data
-  * movement. (A pinned frame re-enters the plan as a bare RDD scan
-  * with NO partitioning metadata, so a co-partitioned shuffle join
-  * would re-exchange the full edge table every round — measured, not
-  * guessed: the broadcast form cuts per-round cost ~3x.) On a graph
-  * whose NODE table outgrows the threshold (billions of nodes) the
-  * hint switches AUTOMATICALLY to shuffle_hash — per-round edge
-  * exchange instead of a driver OOM, the same regime the reference
-  * runs bulk iterations in (IterativeDataSet.java solves on the
-  * shuffle plane). The node count is computed once per query and is
-  * a constant (PageRank) or conservative (BFS frontier ≤ nodes)
-  * upper bound for every round.
+  * Both run as [[VertexLoop]] programs: the adjacency is built and
+  * persisted once, hash-partitioned by node id, and each round is one
+  * Spark job whose only shuffle is the map-side-combined messages — no
+  * per-round Catalyst planning, broadcast build or AQE re-plan. The
+  * fixed-round Catalyst form (a broadcast rank/frontier join plus an
+  * aggregation, pinned per round) spent three jobs and a fresh plan per
+  * round, most of its wall time in scheduling.
   */
 object IteratePack extends QueryPack {
 
-  /** One bound for BOTH the Spark loopUntil and the oracle's recursive
+  /** One bound for BOTH the Spark loop and the oracle's recursive
     * CTE — a graph whose seed eccentricity exceeds it fails the Spark
     * convergence require() loudly instead of silently diverging from a
     * shorter-bounded oracle walk. */
   private val MaxHops = 20
 
-  /** Symmetric (src, dst) edges, distinct, pinned; both endpoints
-    * BIGINT. */
-  private def edges(s: SparkSession, d: String): DataFrame = {
-    val fwd = Materialize.pin(T.lineitem(s, d)
-      .select(col("l_partkey").as("src"),
-        (col("l_suppkey") + 100000L).as("dst"))
-      .distinct())
-    // directions live in disjoint id ranges, so the union stays distinct
-    val sym = Materialize.pin(
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))))
-    Materialize.release(fwd) // folded into sym; never evaluated again
-    sym
+  /** PageRank's fixed round count. */
+  private val PageRankRounds = 10
+
+  /** BFS distance of a node no round has reached yet (output as null). */
+  private val Unreached = Long.MaxValue
+
+  /** Adjacency of the symmetric part<->supplier graph. The unfanned
+    * read: the adjacency build is itself a shuffle by node id, so a
+    * fan-out exchange in front of it would be pure cost. */
+  private def adjacency(s: SparkSession, d: String) =
+    VertexLoop.adjacency(T.lineitemRaw(s, d)
+      .select(col("l_partkey"), col("l_suppkey") + 100000L))
+
+  /** Integer PageRank, damping 0.85 as the exact rational 17/20:
+    * rank'(v) = 150000 + (17 * sum_{u->v} (rank(u) div deg(u))) div 20,
+    * all BIGINT, every node sending every round. */
+  private[graft] val pageRankProgram: VertexLoop.Program =
+    new VertexLoop.Program {
+      def init(id: Long): Long = 1000000L
+      def sends(value: Long, changed: Boolean): Boolean = true
+      def message(value: Long, degree: Int): Long = value / degree
+      def combine(a: Long, b: Long): Long = a + b
+      def update(value: Long, inbox: Option[Long]): Long =
+        150000L + 17L * inbox.getOrElse(0L) / 20L
+    }
+
+  /** Frontier BFS hop levels from `seed`: only a node whose distance
+    * improved last round sends (distance + 1), and a node keeps the
+    * minimum of its distance and its inbox. */
+  private[graft] def bfsProgram(seed: Long): VertexLoop.Program =
+    new VertexLoop.Program {
+      def init(id: Long): Long = if (id == seed) 0L else Unreached
+      def sends(value: Long, changed: Boolean): Boolean =
+        changed && value != Unreached
+      def message(value: Long, degree: Int): Long = value + 1L
+      def combine(a: Long, b: Long): Long = math.min(a, b)
+      def update(value: Long, inbox: Option[Long]): Long =
+        inbox.fold(value)(math.min(value, _))
+    }
+
+  /** q_pagerank as (frame, rounds, converged); rounds stop early only
+    * at an exact fixpoint, where further rounds could not change a
+    * rank. */
+  private[graft] def pageRank(s: SparkSession, d: String)
+      : (DataFrame, Int, Boolean) = {
+    val adj = adjacency(s, d)
+    try VertexLoop.run(s, adj, pageRankProgram, PageRankRounds, "rank_micro")
+    finally adj.unpersist(blocking = false)
+  }
+
+  /** q_bfs_levels as (frame, rounds, converged): BFS from the minimum
+    * node id, run until a round improves no distance. */
+  private[graft] def bfsLevels(s: SparkSession, d: String)
+      : (DataFrame, Int, Boolean) = {
+    val adj = adjacency(s, d)
+    try {
+      // the one set-up job, which also builds adj; an empty graph keeps
+      // the Unreached seed and converges in round 1 with no rows
+      val seed = adj.keys.fold(Unreached)(math.min)
+      val (out, rounds, converged) =
+        VertexLoop.run(s, adj, bfsProgram(seed), MaxHops, "dist")
+      (out.select(col("id"),
+        when(col("dist") =!= Unreached, col("dist")).as("dist")),
+        rounds, converged)
+    } finally adj.unpersist(blocking = false)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Integer PageRank, 10 fixed power-iteration rounds (damping 0.85
-    // as the exact rational 17/20). rank'(v) = 150000 +
-    // (17 * sum_{u->v} (rank(u) div deg(u))) div 20, all BIGINT.
-    "q_pagerank" -> ((s, d) => {
-      val e = edges(s, d)
-      val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
-      // out-degree fused onto each edge once, so rounds never join deg
-      val ewd = Materialize.pin(e.join(deg, "src"))
-      val nodes = e.select(col("src").as("id")).distinct()
-      // one count job; constant across rounds (rank rows = nodes)
-      val nNodes = nodes.count()
-      val init = nodes.withColumn("rank_micro", lit(1000000L))
-      // pinEvery=2: each materialization job covers two power-iteration
-      // steps (the rank frame enters each step once, so plan depth is
-      // linear in the stride) — half the pin-job overhead. Stride 5
-      // was A/B-probed r16 (2.76 vs 2.85 s clean mins, within the
-      // run-to-run noise band): pin-job latency is NOT the remaining
-      // bottleneck, so the shallower, easier-to-debug plan stays.
-      // alias-qualified join: with pinEvery>1 a later composed step
-      // re-joins ewd against a frame already derived from ewd, which
-      // dataset-id column references would flag as an ambiguous
-      // self-join
-      val out = Iterate.loop(init, 10, pinEvery = 2) { (pr, _) =>
-        Iterate.smallSide(pr.as("p"), nNodes)
-          .join(ewd.as("w"), col("p.id") === col("w.src"))
-          .select(col("w.dst").as("id"),
-            expr("p.rank_micro div w.d").as("c"))
-          .groupBy("id").agg(sum("c").as("contrib"))
-          .select(col("id"),
-            (lit(150000L) + expr("(17 * contrib) div 20"))
-              .as("rank_micro"))
-      }
-      // every round already ran eagerly; the returned frame is a
-      // self-contained pin, so the graph scaffolding can go now
-      Materialize.release(e); Materialize.release(ewd)
-      out
-    }),
-
-    // BFS hop levels from the minimum node id, run to CONVERGENCE via
-    // loopUntil (the DataSet-iteration convergence-criterion path):
-    // a round that improves no distance ends the loop. Convergence is
-    // observed DURING the round's pin job via Dataset.observe — the
-    // same one-action-per-round contract as ConnectedComponents (the
-    // pre-r8 prev-vs-next join scan doubled per-round job count).
+    "q_pagerank" -> ((s, d) => pageRank(s, d)._1),
     "q_bfs_levels" -> ((s, d) => {
-      val e = edges(s, d)
-      val nodes = e.select(col("src").as("id")).distinct()
-      val nNodes = nodes.count() // frontier ≤ nodes every round
-      val seed = nodes.agg(min("id").as("seed_id"))
-      val init = nodes
-        .join(broadcast(seed), nodes("id") === seed("seed_id"), "left")
-        .select(col("id"),
-          when(col("seed_id").isNotNull, 0L).cast("long").as("dist"))
-      // Per-round shape (r17): ONE broadcast join + ONE aggregation —
-      // the same union-aggregate cadence as ConnectedComponents. The
-      // previous form aggregated the propagated distances first and
-      // LEFT-joined them back onto the node table, which cost an extra
-      // shuffle stage and a second (AQE-planned) join every round; the
-      // union form lets the single groupBy take min over {neighbors'
-      // dist+1} ∪ {own dist} directly (min ignores nulls, and a node
-      // with no reached neighbor and a null own dist stays null), while
-      // the is_self tag carries the previous distance through the same
-      // aggregation for the in-job convergence observation.
-      var obs: org.apache.spark.sql.Observation = null
-      val (out, _, converged) = Iterate.loopUntil(init, MaxHops) { (cur, r) =>
-        val prop = Iterate
-          .smallSide(cur.filter(col("dist").isNotNull), nNodes)
-          .join(e, cur("id") === e("src"))
-          .select(e("dst").as("id"), (col("dist") + 1L).as("dist"),
-            lit(false).as("is_self"))
-        obs = org.apache.spark.sql.Observation(s"bfs_round_$r")
-        prop
-          .union(cur.select(col("id"), col("dist"),
-            lit(true).as("is_self")))
-          .groupBy("id").agg(min(col("dist")).as("dist"),
-            min(when(col("is_self"), col("dist"))).as("prev_dist"))
-          .observe(obs, coalesce(
-            sum(when(!(col("dist") <=> col("prev_dist")), 1L)
-              .otherwise(0L)), lit(0L)).as("improved"))
-          .select(col("id"), col("dist"))
-      } { (_, _) =>
-        obs.get("improved").asInstanceOf[Long] == 0L
-      }
+      val (out, _, converged) = bfsLevels(s, d)
       require(converged, "BFS did not converge within the round bound")
-      Materialize.release(e)
       out
     })
   )

@@ -1,15 +1,147 @@
 package graft
 
-import graft.ext.Iterate
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.ext.{Iterate, Materialize, VertexLoop}
+import graft.operators.IteratePack
+import org.apache.spark.HashPartitioner
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** graft.ext.Iterate — the bounded-iteration operator behind
-  * q_pagerank / q_bfs_levels (reference IterativeStream.java /
-  * IterativeDataSet.java; SURVEY §2.13 iterations row).
+/** Counts evaluations of the reordering adjacency in the order-
+  * independence test (local mode: tasks run in this JVM). */
+object AdjacencyEvaluations { val count = new AtomicInteger }
+
+/** graft.ext.Iterate (bounded DataFrame iteration) and graft.ext.VertexLoop
+  * (the co-partitioned vertex loop behind q_pagerank / q_bfs_levels);
+  * reference IterativeStream.java / IterativeDataSet.java /
+  * DeltaIteration.java, SURVEY §2.13 iterations row.
   */
 class IterateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Blocks until the asynchronous listener bus stops moving `n`. */
+  private def quiesce(n: AtomicInteger): Int = {
+    var prev = -1; var cur = n.get()
+    while (cur != prev) { prev = cur; Thread.sleep(200); cur = n.get() }
+    cur
+  }
+
+  test("vertex loop cadence: q_bfs_levels and q_pagerank run exactly " +
+      "one job per round plus a fixed set-up, and keep only the final " +
+      "round pinned") {
+    val sc = spark.sparkContext
+    val group = "vertex-loop-cadence"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "vertex loop job cadence")
+    def jobsOf[A](body: => A): (A, Int) = {
+      val before = quiesce(jobs)
+      val pinsBefore = sc.getPersistentRDDs.keySet
+      val out = body
+      val added = sc.getPersistentRDDs.keySet -- pinsBefore
+      assert(added.size == 1, s"expected only the final round pinned, " +
+        s"found ${added.size} persisted RDDs (adjacency or a superseded " +
+        "round leaked)")
+      (out, quiesce(jobs) - before)
+    }
+    try {
+      // the first read of a parquet table infers its schema with a job
+      // of its own; the session memoizes the frame, so take that first
+      Tables.lineitemRaw(spark, TestSpark.sf)
+      // set-up = 1 job: the seed (minimum node id), which also builds
+      // and persists the adjacency
+      val ((bfs, bfsRounds, converged), bfsJobs) =
+        jobsOf(IteratePack.bfsLevels(spark, TestSpark.sf))
+      assert(converged && bfsRounds >= 3, s"BFS ran $bfsRounds rounds")
+      assert(bfsJobs == bfsRounds + 1,
+        s"BFS ran $bfsJobs jobs for $bfsRounds rounds (expected rounds + 1)")
+      // set-up = 0 jobs: round 1's job builds the adjacency
+      val ((pr, prRounds, _), prJobs) =
+        jobsOf(IteratePack.pageRank(spark, TestSpark.sf))
+      assert(prRounds == 10, s"PageRank ran $prRounds rounds")
+      assert(prJobs == prRounds,
+        s"PageRank ran $prJobs jobs for $prRounds rounds (expected rounds)")
+      assert(bfs.count() > 0 && pr.count() > 0)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("vertex loop merges by key: adjacency partitions recomputed in " +
+      "another row order every round give the same BFS and PageRank") {
+    val sp = spark
+    val rnd = new scala.util.Random(11)
+    val n = 300
+    // plus a separate 3-node path, which BFS from the minimum id never
+    // reaches
+    val edges = Seq.fill(700)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (a, b) => a != b } ++ Seq((1000L, 1001L), (1001L, 1002L))
+    val nbrs: Map[Long, Array[Long]] = (edges ++ edges.map(_.swap))
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).distinct.toArray }
+    // NOT persisted: every round recomputes every adjacency partition,
+    // and each evaluation rotates its rows and flips neighbour order
+    val adj = sp.sparkContext.parallelize(nbrs.toSeq, 3)
+      .partitionBy(new HashPartitioner(4))
+      .mapPartitions({ it =>
+        val rows = it.toArray
+        val k = AdjacencyEvaluations.count.incrementAndGet()
+        val cut = if (rows.isEmpty) 0 else k % rows.length
+        (rows.drop(cut) ++ rows.take(cut)).iterator.map { case (v, ns) =>
+          v -> (if (k % 2 == 0) ns.reverse else ns) }
+      }, preservesPartitioning = true)
+
+    // plain-Scala references
+    val seed = nbrs.keys.min
+    val dist = scala.collection.mutable.Map(seed -> 0L)
+    var frontier = Seq(seed)
+    while (frontier.nonEmpty) {
+      frontier = frontier.flatMap(v => nbrs(v).toSeq.map(_ -> (dist(v) + 1)))
+        .filterNot { case (u, _) => dist.contains(u) }
+        .groupBy(_._1).map { case (u, ds) => dist(u) = ds.head._2; u }.toSeq
+    }
+    val wantBfs = nbrs.keys.map(v => v -> dist.getOrElse(v, Long.MaxValue)).toMap
+    var rank = nbrs.keys.map(_ -> 1000000L).toMap
+    (1 to 10).foreach { _ =>
+      rank = nbrs.map { case (v, ns) =>
+        v -> (150000L + 17L * ns.map(u => rank(u) / nbrs(u).length).sum / 20L) }
+    }
+
+    def run(prog: VertexLoop.Program, rounds: Int) = {
+      val before = AdjacencyEvaluations.count.get()
+      val (out, ran, _) = VertexLoop.run(sp, adj, prog, rounds, "v")
+      assert(AdjacencyEvaluations.count.get() - before >= ran * 4,
+        "adjacency partitions were not recomputed every round")
+      out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(run(IteratePack.bfsProgram(seed), 50) == wantBfs)
+    assert(run(IteratePack.pageRankProgram, 10) == rank)
+  }
+
+  test("q_bfs_levels and q_pagerank give identical rows with reliable " +
+      "checkpoints") {
+    val sp = spark
+    def rows() = Seq("q_bfs_levels", "q_pagerank").map(q =>
+      SparkEntry.queries(q)(sp, TestSpark.sf).collect().map(_.toString)
+        .sorted.toSeq)
+    val local = rows()
+    val dir = java.nio.file.Files.createTempDirectory("graft-vl-ckpt")
+    sp.sparkContext.setCheckpointDir(dir.toString)
+    sp.conf.set(Materialize.ReliableConf, "true")
+    val reliable = try rows() finally sp.conf.set(Materialize.ReliableConf, "false")
+    assert(local.forall(_.nonEmpty))
+    assert(local == reliable)
+    val wrote = java.nio.file.Files.walk(dir)
+      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+    assert(wrote > 0, "expected reliable checkpoint files under the dir")
+  }
 
   test("loop runs exactly N rounds and threads the round number") {
     val sp = spark
