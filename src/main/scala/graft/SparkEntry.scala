@@ -9,7 +9,7 @@ import graft.operators._
   * column names match the DataFrame's exactly.
   */
 object SparkEntry {
-  private def packs: Seq[QueryPack] = Seq(
+  private[graft] def packs: Seq[QueryPack] = Seq(
     RelationalPack,
     AggregatePack,
     TimeWindowPack,

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryPack
 import graft.dsreal.{DsOracle, DsTables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** REAL-schema TPC-DS queries, continuation of [[DsRealPack]] (which
@@ -29,7 +29,9 @@ import org.apache.spark.sql.functions._
   * scans are single-pass per channel slice with conditional
   * aggregation replacing the reference's repeated scalar subqueries
   * (q9: 10 subqueries -> 1 scan; q61: 2 -> 1; q44: the null-addr
-  * baseline folds into the per-item pass as a conditional sum).
+  * baseline folds into the per-item pass as a conditional sum). Keys
+  * in `textOnly` have no DataFrame translation: they run their oracle
+  * text, by DsRealPack's rule.
   */
 object DsRealPack2 extends QueryPack {
 
@@ -37,14 +39,20 @@ object DsRealPack2 extends QueryPack {
 
   /** Exact micro-mean (x1e6), overflow-safe: split into quotient and
     * scaled remainder so sum is never multiplied while large. */
-  private def mm(c: String): Column =
-    expr(s"(sum($c) div count(*)) * 1000000" +
-      s" + ((sum($c) % count(*)) * 1000000) div count(*)")
   private def mmSql(c: String): String =
     s"CAST((CAST((sum($c) - (sum($c) % count(*))) / (count(*)) AS BIGINT)) * 1000000" +
       s" + CAST((((sum($c) % count(*)) * 1000000) - (((sum($c) % count(*)) * 1000000) % count(*))) / (count(*)) AS BIGINT) AS BIGINT)"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Served by their verbatim text, as DsRealPack's `textOnly`. */
+  private val textOnly: Seq[String] = Seq(
+    "q18", "q45", "q49", "q50", "q66", "q76", "q91", "q93")
+    .map("q_dsreal_" + _)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    twins ++ textOnly.map(k => k -> SqlTextPack.text(k))
+
+  /** The DataFrame translations kept, each with its `// kept:` rule. */
+  private def twins: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // query9.sql: five quantity-band buckets over store_sales, each
     // reporting avg discount when the band is populous, avg net paid
@@ -54,6 +62,7 @@ object DsRealPack2 extends QueryPack {
     // that survives 100 TB. Bands rescaled to the generator's 1..50
     // quantity domain; thresholds bracket the sf0.01 band counts so
     // both CASE branches are exercised.
+    // kept: rule (a), text plans 15 lineitem scans, budget 1
     "q_dsreal_q9" -> ((s, d) => {
       import s.implicits._
       val ranges = Seq((1, 10, 3000L), (11, 20, 5000L), (21, 30, 3500L),
@@ -79,119 +88,12 @@ object DsRealPack2 extends QueryPack {
       one.crossJoin(broadcast(r1)).select(buckets: _*)
     }),
 
-    // query18.sql: catalog sales of female 'Unknown'-education
-    // shoppers born in the listed months, ROLLUP over item x address
-    // hierarchy with seven exact micro-means (quantity, list price,
-    // coupon, sales price, net profit, birth year, dependents).
-    "q_dsreal_q18" -> ((s, d) => {
-      import s.implicits._
-      val dd = DsTables.dateDim(s).filter($"d_year" === 1998)
-        .select($"d_date_sk")
-      val cd1 = DsTables.customerDemographics(s)
-        .filter($"cd_gender" === "F" && $"cd_education_status" === "Unknown")
-        .select($"cd_demo_sk".as("cd1_sk"), $"cd_dep_count")
-      val cd2 = DsTables.customerDemographics(s)
-        .select($"cd_demo_sk".as("cd2_sk"))
-      val cust = DsTables.customerDim(s, d)
-        .filter($"c_birth_month".isin(1, 6, 8, 9, 12, 2))
-        .select($"c_customer_sk", $"c_current_cdemo_sk",
-          $"c_current_addr_sk", $"c_birth_year")
-      val ca = DsTables.customerAddress(s, d)
-        .filter($"ca_state".isin("TN", "NY", "NM"))
-        .select($"ca_address_sk", $"ca_country", $"ca_state", $"ca_county")
-      val it = DsTables.item(s, d).select($"i_item_sk", $"i_item_id")
-      DsTables.catalogSales(s, d)
-        .join(broadcast(dd), $"cs_sold_date_sk" === $"d_date_sk")
-        .join(broadcast(it), $"cs_item_sk" === $"i_item_sk")
-        .join(broadcast(cd1), $"cs_bill_cdemo_sk" === $"cd1_sk")
-        .join(broadcast(cust), $"cs_bill_customer_sk" === $"c_customer_sk")
-        .join(broadcast(cd2), $"c_current_cdemo_sk" === $"cd2_sk")
-        .join(broadcast(ca), $"c_current_addr_sk" === $"ca_address_sk")
-        .rollup($"i_item_id", $"ca_country", $"ca_state", $"ca_county")
-        .agg(mm("cs_quantity").as("agg1"),
-          mm("cs_list_price_cents").as("agg2"),
-          mm("cs_coupon_amt_cents").as("agg3"),
-          mm("cs_sales_price_cents").as("agg4"),
-          mm("cs_net_profit_cents").as("agg5"),
-          mm("c_birth_year").as("agg6"),
-          mm("cd_dep_count").as("agg7"))
-        .orderBy($"ca_country", $"ca_state", $"ca_county", $"i_item_id")
-        .limit(100)
-    }),
-
-    // query45.sql: web sales in Q2/2001 whose buyer lives in one of
-    // the gate zips OR whose item is in the small item-id gate set —
-    // the OR means neither side can become a semi join, so the id set
-    // rides along as a broadcast left-join flag.
-    "q_dsreal_q45" -> ((s, d) => {
-      import s.implicits._
-      val dd = DsTables.dateDim(s)
-        .filter($"d_qoy" === 2 && $"d_year" === 2001).select($"d_date_sk")
-      val cust = DsTables.customerDim(s, d)
-        .select($"c_customer_sk", $"c_current_addr_sk")
-      val ca = DsTables.customerAddress(s, d)
-        .select($"ca_address_sk", $"ca_zip", $"ca_city")
-      val it = DsTables.item(s, d).select($"i_item_sk", $"i_item_id")
-      val gateIds = DsTables.item(s, d)
-        .filter($"i_item_sk".isin(2, 3, 5, 7, 11, 13, 17, 19, 23, 29))
-        .select($"i_item_id".as("gate_id")).withColumn("in_gate", lit(1))
-      val zips = Seq("Z1", "Z7", "Z13", "Z19", "Z25", "Z31", "Z37", "Z43",
-        "Z49")
-      DsTables.webSales(s, d)
-        .join(broadcast(dd), $"ws_sold_date_sk" === $"d_date_sk")
-        .join(broadcast(cust), $"ws_bill_customer_sk" === $"c_customer_sk")
-        .join(broadcast(ca), $"c_current_addr_sk" === $"ca_address_sk")
-        .join(broadcast(it), $"ws_item_sk" === $"i_item_sk")
-        .join(broadcast(gateIds), $"i_item_id" === $"gate_id", "left")
-        .filter($"ca_zip".isin(zips: _*) || $"in_gate" === 1)
-        .groupBy($"ca_zip", $"ca_city")
-        .agg(sum($"ws_sales_price_cents").as("sum_sales"))
-        .orderBy($"ca_zip", $"ca_city")
-        .limit(100)
-    }),
-
-    // query50.sql: per-store return-latency report — counts of
-    // returns landing within 30/60/90/120/over-120 days of the sale,
-    // for returns booked in Aug 2001. The derived return lag spans
-    // 1..146 days so every band is populated.
-    "q_dsreal_q50" -> ((s, d) => {
-      import s.implicits._
-      val d1 = DsTables.dateDim(s).select($"d_date_sk".as("d1_sk"))
-      val d2 = DsTables.dateDim(s)
-        .filter($"d_year" === 2001 && $"d_moy" === 8)
-        .select($"d_date_sk".as("d2_sk"))
-      val st = DsTables.store(s)
-      val lag = $"sr_returned_date_sk" - $"ss_sold_date_sk"
-      DsTables.storeSales(s, d)
-        .join(DsTables.storeReturns(s, d),
-          $"ss_ticket_number" === $"sr_ticket_number" &&
-            $"ss_item_sk" === $"sr_item_sk" &&
-            $"ss_customer_sk" === $"sr_customer_sk")
-        .join(broadcast(d1), $"ss_sold_date_sk" === $"d1_sk")
-        .join(broadcast(d2), $"sr_returned_date_sk" === $"d2_sk")
-        .join(broadcast(st), $"ss_store_sk" === $"s_store_sk")
-        .groupBy($"s_store_name", $"s_company_id", $"s_street_number",
-          $"s_street_name", $"s_street_type", $"s_suite_number",
-          $"s_city", $"s_county", $"s_state", $"s_zip")
-        .agg(sum(when(lag <= 30, 1L).otherwise(0L)).as("days_30"),
-          sum(when(lag > 30 && lag <= 60, 1L).otherwise(0L))
-            .as("days_31_60"),
-          sum(when(lag > 60 && lag <= 90, 1L).otherwise(0L))
-            .as("days_61_90"),
-          sum(when(lag > 90 && lag <= 120, 1L).otherwise(0L))
-            .as("days_91_120"),
-          sum(when(lag > 120, 1L).otherwise(0L)).as("days_over_120"))
-        .orderBy($"s_store_name", $"s_company_id", $"s_street_number",
-          $"s_street_name", $"s_street_type", $"s_suite_number",
-          $"s_city", $"s_county", $"s_state", $"s_zip")
-        .limit(100)
-    }),
-
     // query61.sql: promoted share of store revenue for one category /
     // timezone / month. The reference computes numerator and
     // denominator as two full scans differing only by the promotion
     // join; here ONE scan left-joins promotion and splits with a
     // conditional sum — same two numbers, half the fact I/O.
+    // kept: rule (a), text plans 2 lineitem scans, budget 1
     "q_dsreal_q61" -> ((s, d) => {
       import s.implicits._
       val dd = DsTables.dateDim(s)
@@ -223,65 +125,6 @@ object DsRealPack2 extends QueryPack {
           expr("(promotions * 1000000) div total").as("ratio_ppm"))
     }),
 
-    // query76.sql: sales whose channel-specific role key is NULL
-    // (store for ss, ship-to customer for ws, ship-to address for
-    // cs), counted per channel x quarter x category — the derived
-    // facts carry a ~2% NULL slice in exactly these keys.
-    "q_dsreal_q76" -> ((s, d) => {
-      import s.implicits._
-      val dd = DsTables.dateDim(s)
-        .select($"d_date_sk", $"d_year", $"d_qoy")
-      val it = DsTables.item(s, d).select($"i_item_sk", $"i_category")
-      def branch(f: DataFrame, nullCol: String, dateCol: String,
-          itemCol: String, extCol: String, chan: String) =
-        f.filter(col(nullCol).isNull)
-          .join(broadcast(dd), col(dateCol) === $"d_date_sk")
-          .join(broadcast(it), col(itemCol) === $"i_item_sk")
-          .select(lit(chan).as("channel"), lit(nullCol).as("col_name"),
-            $"d_year", $"d_qoy", $"i_category",
-            col(extCol).as("ext_sales_price"))
-      branch(DsTables.storeSales(s, d), "ss_store_sk", "ss_sold_date_sk",
-          "ss_item_sk", "ss_ext_sales_price_cents", "store")
-        .union(branch(DsTables.webSales(s, d), "ws_ship_customer_sk",
-          "ws_sold_date_sk", "ws_item_sk", "ws_ext_sales_price_cents",
-          "web"))
-        .union(branch(DsTables.catalogSales(s, d), "cs_ship_addr_sk",
-          "cs_sold_date_sk", "cs_item_sk", "cs_ext_sales_price_cents",
-          "catalog"))
-        .groupBy($"channel", $"col_name", $"d_year", $"d_qoy",
-          $"i_category")
-        .agg(count(lit(1)).as("sales_cnt"),
-          sum($"ext_sales_price").as("sales_amt"))
-        .orderBy($"channel", $"col_name", $"d_year", $"d_qoy",
-          $"i_category")
-        .limit(100)
-    }),
-
-    // query93.sql: per-customer revenue with returned quantities
-    // netted out, restricted to one return reason — the reference's
-    // left join degenerates to inner through the WHERE on
-    // sr_reason_sk, kept as written.
-    "q_dsreal_q93" -> ((s, d) => {
-      import s.implicits._
-      val r = DsTables.reason(s).filter($"r_reason_desc" === "Reason_8")
-        .select($"r_reason_sk".as("rsk"))
-      DsTables.storeSales(s, d)
-        .join(DsTables.storeReturns(s, d),
-          $"sr_item_sk" === $"ss_item_sk" &&
-            $"sr_ticket_number" === $"ss_ticket_number", "left")
-        .join(broadcast(r), $"sr_reason_sk" === $"rsk")
-        .select($"ss_customer_sk",
-          when($"sr_return_quantity".isNotNull,
-            ($"ss_quantity" - $"sr_return_quantity") *
-              $"ss_sales_price_cents")
-            .otherwise($"ss_quantity" * $"ss_sales_price_cents")
-            .as("act_sales"))
-        .groupBy($"ss_customer_sk")
-        .agg(sum($"act_sales").as("sumsales"))
-        .orderBy($"sumsales", $"ss_customer_sk")
-        .limit(100)
-    }),
-
     // query44.sql: best/worst items of store 4 by average net profit,
     // both ranked against the HAVING baseline (90% of the store's
     // average over its null-address slice). The reference scans the
@@ -292,6 +135,7 @@ object DsRealPack2 extends QueryPack {
     // rank directions all read the pin. Rank
     // keys are totalized with item_sk so rnk is a unique 1..n and the
     // asc/desc join stays 1:1.
+    // kept: rules (a)+(b), text plans 4 lineitem scans; golden plan
     "q_dsreal_q44" -> ((s, d) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
@@ -326,62 +170,6 @@ object DsRealPack2 extends QueryPack {
         .limit(100)
     }),
 
-    // query49.sql: per channel, the items ranking worst by return
-    // quantity ratio or by returned-currency ratio (top-10 of either
-    // rank) in one month — ratios as exact micro-units, rank keys
-    // totalized with the item, UNION deduplicated across channels.
-    "q_dsreal_q49" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val dd = DsTables.dateDim(s)
-        .filter($"d_year" === 2000 && $"d_moy" === 12).select($"d_date_sk")
-      def micro(num: String, den: String) =
-        expr(s"($num div $den) * 1000000 + (($num % $den) * 1000000)" +
-          s" div $den")
-      def branch(label: String, f: DataFrame, itemC: String, ordC: String,
-          qtyC: String, paidC: String, profC: String, dateC: String,
-          r: DataFrame, ritemC: String, rordC: String, rqtyC: String,
-          ramtC: String) =
-        f.join(r, col(ordC) === col(rordC) && col(itemC) === col(ritemC),
-            "left")
-          .join(broadcast(dd), col(dateC) === $"d_date_sk")
-          .filter(col(ramtC) > 10000 && col(profC) > 1 &&
-            col(paidC) > 0 && col(qtyC) > 0)
-          .groupBy(col(itemC))
-          .agg(sum(coalesce(col(rqtyC), lit(0L))).as("rq"),
-            sum(coalesce(col(qtyC), lit(0L))).as("sq"),
-            sum(coalesce(col(ramtC), lit(0L))).as("ra"),
-            sum(coalesce(col(paidC), lit(0L))).as("sp"))
-          .select(col(itemC).as("item"),
-            micro("rq", "sq").as("return_ratio"),
-            micro("ra", "sp").as("currency_ratio"))
-          .withColumn("return_rank", rank().over(
-            Window.orderBy($"return_ratio", $"item")).cast("long"))
-          .withColumn("currency_rank", rank().over(
-            Window.orderBy($"currency_ratio", $"item")).cast("long"))
-          .filter($"return_rank" <= 10 || $"currency_rank" <= 10)
-          .select(lit(label).as("channel"), $"item", $"return_ratio",
-            $"return_rank", $"currency_rank")
-      branch("web", DsTables.webSales(s, d), "ws_item_sk",
-          "ws_order_number", "ws_quantity", "ws_net_paid_cents",
-          "ws_net_profit_cents", "ws_sold_date_sk",
-          DsTables.webReturns(s, d), "wr_item_sk", "wr_order_number",
-          "wr_return_quantity", "wr_return_amt_cents")
-        .union(branch("catalog", DsTables.catalogSales(s, d), "cs_item_sk",
-          "cs_order_number", "cs_quantity", "cs_net_paid_cents",
-          "cs_net_profit_cents", "cs_sold_date_sk",
-          DsTables.catalogReturns(s, d), "cr_item_sk", "cr_order_number",
-          "cr_return_quantity", "cr_return_amt_cents"))
-        .union(branch("store", DsTables.storeSales(s, d), "ss_item_sk",
-          "ss_ticket_number", "ss_quantity", "ss_net_paid_cents",
-          "ss_net_profit_cents", "ss_sold_date_sk",
-          DsTables.storeReturns(s, d), "sr_item_sk", "sr_ticket_number",
-          "sr_return_quantity", "sr_return_amt_cents"))
-        .distinct()
-        .orderBy($"channel", $"return_rank", $"currency_rank", $"item")
-        .limit(100)
-    }),
-
     // query70.sql: net-profit ROLLUP over the state/county hierarchy
     // for a 12-month window, states gated to the top performers,
     // ranked within each hierarchy parent. The reference's inner
@@ -389,6 +177,7 @@ object DsRealPack2 extends QueryPack {
     // constantly 1), adapted to a global top-3 so the gate bites; the
     // fact is scanned ONCE — the (state, county) pre-aggregate is
     // pinned and both the state ranking and the ROLLUP read the pin.
+    // kept: rules (a)+(b), text plans 3 lineitem scans; golden plan
     "q_dsreal_q70" -> ((s, d) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
@@ -429,6 +218,7 @@ object DsRealPack2 extends QueryPack {
     // year-over-year than their store total — q11's shape with
     // net_paid instead of ext price, the growth gate cross-multiplied
     // exact. One pinned year_total frame serves all four roles.
+    // kept: rule (a), text plans 4 lineitem scans, budget 1
     "q_dsreal_q74" -> ((s, d) => {
       import s.implicits._
       val dd = DsTables.dateDim(s).filter($"d_year".isin(2000, 2001))
@@ -476,6 +266,7 @@ object DsRealPack2 extends QueryPack {
     // join keeps only items returned in ALL THREE channels, and three
     // weeks of derived returns have no triple-channel item at sf0.01
     // (the q14b week->month precedent).
+    // kept: rule (c), text 16 jobs vs 15, 16 stages vs 15
     "q_dsreal_q83" -> ((s, d) => {
       import s.implicits._
       val probe = DsTables.dateDim(s)
@@ -521,6 +312,7 @@ object DsRealPack2 extends QueryPack {
     // their demographics id (the reference's sr_cdemo_sk = cd_demo_sk
     // key) — the whole customer-side snowflake reduces to a tiny
     // city-gated frame that broadcasts against the returns scan.
+    // kept: rule (c), text 9 jobs vs 8, 10 stages vs 9
     "q_dsreal_q84" -> ((s, d) => {
       import s.implicits._
       val ca = DsTables.customerAddress(s, d)
@@ -549,119 +341,13 @@ object DsRealPack2 extends QueryPack {
         .limit(100)
     }),
 
-    // query91.sql: call-center losses from catalog returns by widowed
-    // or married customers of two education profiles in one timezone —
-    // grouped per center AND demographic pair (the pair is grouped but
-    // not output, as written in the reference). Period widened from
-    // the reference's one month to the year: the demographic x
-    // timezone joint gate is ~1/420, and one month of derived catalog
-    // returns is empty under it at sf0.01 (the q14b week->month
-    // precedent).
-    "q_dsreal_q91" -> ((s, d) => {
-      import s.implicits._
-      val dd = DsTables.dateDim(s)
-        .filter($"d_year" === 2000).select($"d_date_sk")
-      val cd = DsTables.customerDemographics(s)
-        .filter(($"cd_marital_status" === "M" &&
-          $"cd_education_status" === "Unknown") ||
-          ($"cd_marital_status" === "W" &&
-            $"cd_education_status" === "Advanced Degree"))
-        .select($"cd_demo_sk", $"cd_marital_status",
-          $"cd_education_status")
-      val hd = DsTables.householdDemographics(s)
-        .filter($"hd_buy_potential".like("Unknown%")).select($"hd_demo_sk")
-      val ca = DsTables.customerAddress(s, d)
-        .filter($"ca_gmt_offset" === -7).select($"ca_address_sk")
-      val cust = DsTables.customerDim(s, d)
-        .select($"c_customer_sk", $"c_current_cdemo_sk",
-          $"c_current_hdemo_sk", $"c_current_addr_sk")
-      DsTables.catalogReturns(s, d)
-        .join(broadcast(DsTables.callCenter(s)),
-          $"cr_call_center_sk" === $"cc_call_center_sk")
-        .join(broadcast(dd), $"cr_returned_date_sk" === $"d_date_sk")
-        .join(broadcast(cust),
-          $"cr_returning_customer_sk" === $"c_customer_sk")
-        .join(broadcast(cd), $"c_current_cdemo_sk" === $"cd_demo_sk")
-        .join(broadcast(hd), $"c_current_hdemo_sk" === $"hd_demo_sk")
-        .join(broadcast(ca), $"c_current_addr_sk" === $"ca_address_sk")
-        .groupBy($"cc_call_center_id", $"cc_name", $"cc_manager",
-          $"cd_marital_status", $"cd_education_status")
-        .agg(sum($"cr_net_loss_cents").as("returns_loss"))
-        .select($"cc_call_center_id".as("call_center"),
-          $"cc_name".as("call_center_name"), $"cc_manager".as("manager"),
-          $"returns_loss")
-        .orderBy($"returns_loss".desc, $"call_center")
-    }),
-
-    // query66.sql: warehouse shipping report — web + catalog sales in
-    // one shift window and two carriers, pivoted into 12 monthly sales
-    // / net columns per warehouse, re-aggregated with per-square-foot
-    // micro-rates (x1e6, mirrored exactly: the integer division
-    // happens on each branch row before the outer sum, as in the
-    // reference's sum-of-quotients).
-    "q_dsreal_q66" -> ((s, d) => {
-      import s.implicits._
-      val months = Seq("jan", "feb", "mar", "apr", "may", "jun", "jul",
-        "aug", "sep", "oct", "nov", "dec")
-      val dd = DsTables.dateDim(s).filter($"d_year" === 2001)
-        .select($"d_date_sk", $"d_moy", $"d_year")
-      val td = DsTables.timeDim(s)
-        .filter($"t_time".between(30838, 30838 + 28800))
-        .select($"t_time_sk")
-      val sm = DsTables.shipMode(s)
-        .filter($"sm_carrier".isin("DHL", "BARIAN"))
-        .select($"sm_ship_mode_sk")
-      val wh = DsTables.warehouse(s)
-      def branch(f: DataFrame, whC: String, dateC: String, timeC: String,
-          modeC: String, salesE: Column, netE: Column) = {
-        val aggs = months.zipWithIndex.flatMap { case (mn, i) =>
-          Seq(sum(when($"d_moy" === i + 1, salesE).otherwise(0L))
-            .as(s"${mn}_sales"),
-            sum(when($"d_moy" === i + 1, netE).otherwise(0L))
-              .as(s"${mn}_net"))
-        }
-        f.join(broadcast(dd), col(dateC) === $"d_date_sk")
-          .join(broadcast(td), col(timeC) === $"t_time_sk")
-          .join(broadcast(sm), col(modeC) === $"sm_ship_mode_sk")
-          .join(broadcast(wh), col(whC) === $"w_warehouse_sk")
-          .groupBy($"w_warehouse_name", $"w_warehouse_sq_ft", $"w_city",
-            $"w_county", $"w_state", $"w_country", $"d_year")
-          .agg(aggs.head, aggs.tail: _*)
-          .select((Seq($"w_warehouse_name", $"w_warehouse_sq_ft",
-            $"w_city", $"w_county", $"w_state", $"w_country",
-            lit("DHL,BARIAN").as("ship_carriers"),
-            $"d_year".as("year")) ++
-            months.flatMap(mn =>
-              Seq(col(s"${mn}_sales"), col(s"${mn}_net")))): _*)
-      }
-      val outerAggs = months.flatMap { mn =>
-        Seq(sum(col(s"${mn}_sales")).as(s"${mn}_sales"),
-          sum(expr(s"(${mn}_sales * 1000000) div w_warehouse_sq_ft"))
-            .as(s"${mn}_sales_per_sq_foot"),
-          sum(col(s"${mn}_net")).as(s"${mn}_net"))
-      }
-      branch(DsTables.webSales(s, d), "ws_warehouse_sk",
-          "ws_sold_date_sk", "ws_sold_time_sk", "ws_ship_mode_sk",
-          $"ws_ext_sales_price_cents" * $"ws_quantity",
-          $"ws_net_paid_cents" * $"ws_quantity")
-        .union(branch(DsTables.catalogSales(s, d), "cs_warehouse_sk",
-          "cs_sold_date_sk", "cs_sold_time_sk", "cs_ship_mode_sk",
-          $"cs_sales_price_cents" * $"cs_quantity",
-          $"cs_net_paid_inc_tax_cents" * $"cs_quantity"))
-        .groupBy($"w_warehouse_name", $"w_warehouse_sq_ft", $"w_city",
-          $"w_county", $"w_state", $"w_country", $"ship_carriers",
-          $"year")
-        .agg(outerAggs.head, outerAggs.tail: _*)
-        .orderBy($"w_warehouse_name")
-        .limit(100)
-    }),
-
     // query77.sql: 30-day per-channel sales/returns/profit with each
     // channel keyed by its own location dim (store / call center /
     // web page), ROLLUP over (channel, id). The store and web
     // branches left-join their returns on the location key; the
     // catalog branch keeps the reference's bare CROSS JOIN of the cs
     // and cr aggregates.
+    // kept: no text: the raw text plans a cartesian product
     "q_dsreal_q77" -> ((s, d) => {
       import s.implicits._
       val dd30 = DsTables.dateDim(s)
@@ -733,6 +419,7 @@ object DsRealPack2 extends QueryPack {
     // query80.sql: 30-day per-channel report over promoted (non-TV)
     // sales of high-priced items, sales left-joined to their returns,
     // ROLLUP over (channel, 'prefix'||id).
+    // kept: rule (d), text misses the sf0.001 oracle, as this twin does
     "q_dsreal_q80" -> ((s, d) => {
       import s.implicits._
       val dd30 = DsTables.dateDim(s)

@@ -27,10 +27,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * There the two texts differ by exactly the function spelling
   * (`hamming(a,b)` vs DuckDB's built-in `bit_count(xor(a,b))`).
   *
-  * Scale posture: identical to the q_dsreal_* twins — Spark plans the
-  * text into the same Catalyst logical plan the DataFrame formulation
-  * yields (broadcast dims, pushed filters), which GoldenPlanSpec pins
-  * for the heavy members of the family.
+  * One formulation per query: a q_dsreal_* key whose text plans and
+  * runs as well as its former DataFrame translation is served by this
+  * pack's [[text]] too, so both keys run one function
+  * (DsRealPack/DsRealPack2 `textOnly`; the same-JVM A/B that decided
+  * each pair is plans/text_vs_twin.tsv). A q_dsreal_* key that keeps
+  * its DataFrame twin names the reason beside it: the text exceeds the
+  * twin's PlanAuditSpec fact-scan budget, a GoldenPlanSpec snapshot
+  * pins the twin's plan, or the text measured slower or ran more jobs,
+  * stages or shuffle bytes.
   */
 object SqlTextPack extends QueryPack {
 
@@ -191,13 +196,17 @@ object SqlTextPack extends QueryPack {
     DsTables.promotion(s).createOrReplaceTempView("promotion")
   }
 
+  /** `src`'s oracle text run by Spark over the star views: the one
+    * implementation of q_sqltext_N and of each text-only q_dsreal_N. */
+  private[operators] def text(src: String): (SparkSession, String) => DataFrame =
+    (s, d) => {
+      registerStar(s, d)
+      s.sql(body(src))
+    }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Reused.map { src =>
-      val name = "q_sqltext_" + src.stripPrefix("q_dsreal_")
-      name -> ((s: SparkSession, d: String) => {
-        registerStar(s, d)
-        s.sql(body(src))
-      })
+      ("q_sqltext_" + src.stripPrefix("q_dsreal_")) -> text(src)
     }.toMap + (
       "q_sqltext_hamming" -> ((s: SparkSession, d: String) => {
         T.registerAll(s, d)

@@ -250,10 +250,16 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_tpcds_triunion" -> (3, 3, disjoint),
     "q_tpcds_union_rollup" -> (3, 3, disjoint),
     "q_tpcds_weekpivot" -> (2, 2, disjoint),
-    // q_sqltext_*: SAME text as the dsreal twin but entered through
+    // q_sqltext_*: the q_dsreal_* oracle text entered through
     // spark.sql — WITH-CTEs inline per consumer (no Materialize.pin is
     // reachable from SQL text), so q1's customer_total_return plans
-    // twice; the channel-branch budgets mirror the dsreal twins.
+    // twice; the channel-branch budgets mirror the q_dsreal_* keys. A
+    // q_dsreal_* key served by its text (DsRealPack `textOnly`) is
+    // checked against its own q_dsreal_* budget: a text was only made
+    // the implementation where it already fit that budget; one that
+    // does not (q1, q2, q4, q9, q11, q16, q24a/b, q30, q31, q32, q44,
+    // q59, q61, q65, q70, q74, q81, q92, q94, q95) keeps a DataFrame
+    // twin.
     "q_sqltext_q1" -> (2, 2, "WITH customer_total_return consumed " +
       "twice (store filter + per-store avg); SQL text cannot pin"),
     "q_sqltext_q10" -> (3, 3, "store EXISTS + web/catalog EXISTS " +
@@ -263,8 +269,9 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_sqltext_q51" -> (2, 2, s"web + store cumulative branches; " +
       dsrealChan),
     // r14 widening — the raw texts' extra planned passes ARE the
-    // documented cost of the text entry point vs the hand-built
-    // twins (SqlTextParitySpec pins the flagship q22 case):
+    // documented cost of the text entry point vs the DataFrame twins
+    // kept for exactly that reason (SqlTextParitySpec pins the
+    // flagship q22 case):
     "q_sqltext_q16" -> (4, 4, "cs fact + cs multi-warehouse EXISTS " +
       "self-join (the dsreal twin PINS this side, text cannot) + cr " +
       s"NOT EXISTS + the order-count distinct branch; $dsrealChan"),

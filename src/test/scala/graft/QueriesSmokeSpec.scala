@@ -60,6 +60,14 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  // SparkEntry.queries is packs.flatMap(_.queries).toMap: a key declared
+  // twice silently keeps the last pack's function
+  test("no query key is declared by two packs") {
+    val dup = SparkEntry.packs.flatMap(_.queries.keys)
+      .groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    assert(dup.isEmpty, s"keys declared more than once: $dup")
+  }
+
   test("allowEmpty names real queries") {
     val stale = allowEmpty.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"allowEmpty entries without a query: $stale")
