@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Driver benchmark entry: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -35,14 +37,19 @@ import org.apache.spark.sql.SparkSession
   *     land mid-way through the next query's run.
   *
   * Session degradation (r15): beyond per-slot adjacency, a whole
-  * WINDOW of the session can degrade (r14: prime suspect JIT
-  * code-cache exhaustion; build.sbt now reserves 1g). Three controls:
-  * every query whose primary reading exceeds 2 s is re-timed in the
-  * reversed pass (not just headline+top-10), every sample start is
-  * timestamped into bench_out.json ("started_at"), and JVM health
-  * (code cache / metaspace / GC time / block-dir footprint) is
-  * snapshotted every ~50 slots ("jvm_health") so a degraded window is
-  * both visible and attributable after the fact.
+  * WINDOW of the session can degrade. Two contributors are known: JIT
+  * code-cache exhaustion (r14's prime suspect; build.sbt now reserves
+  * 1g), and Spark's compiled-class cache thrashing — at its default 100
+  * entries a repeated query set recompiled every generated class the
+  * LRU had evicted (55-103 per pass of the benchmark's batch set;
+  * GraftExtensions now sizes it, see plans.CodegenCache). Three
+  * controls: every query whose primary reading exceeds 2 s is re-timed
+  * in the reversed pass (not just headline+top-10), every sample start
+  * is timestamped into bench_out.json ("started_at"), and JVM health
+  * (code cache / metaspace / GC time / block-dir footprint / generated-
+  * class compiles and their Janino ms) is snapshotted every ~50 slots
+  * ("jvm_health") so a degraded window is both visible and attributable
+  * after the fact.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -106,10 +113,16 @@ object Bench {
         .filter(f => f.getName.startsWith("blockmgr-") ||
           f.getName.startsWith("spark-"))
         .map(dirBytes).sum / (1 << 20)
+      // JVM-wide generated-class compiles (cache misses) and their
+      // summed Janino time: a growing count on a repeated query set
+      // means the compiled-class cache is thrashing
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileMs = CodeGenerator.compileTime / 1000000
       healthLog += s"""{"at":$sinceStart,"label":"$label",""" +
         s""""code_cache_mb":${usedMb("CodeHeap")},""" +
         s""""metaspace_mb":${usedMb("Metaspace")},""" +
-        s""""gc_ms":$gcMs,"block_dirs_mb":$blockMb}"""
+        s""""gc_ms":$gcMs,"block_dirs_mb":$blockMb,""" +
+        s""""codegen_compiles":$compiles,"codegen_compile_ms":$compileMs}"""
     }
     var slotCount = 0
     def isolate(): Unit = {

@@ -16,7 +16,9 @@ object ScalingProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.1")
     Seq(1, 2, 4).foreach { mult =>

@@ -21,7 +21,9 @@ object StreamingDemo {
     val spark: SparkSession = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -24,9 +24,20 @@ object RewriteTrivialHamming extends Rule[LogicalPlan] {
 }
 
 /** Builder-time registration:
-  * SparkSession.builder().withExtensions(new GraftExtensions). */
+  * SparkSession.builder().withExtensions(new GraftExtensions).
+  *
+  * Besides injecting graft's rules, installation sizes Spark's JVM-wide
+  * compiled-class cache to [[CodegenCache.Entries]] (8192; Spark's
+  * default is 100) so warm passes stop recompiling generated classes
+  * the LRU evicted. `withExtensions` runs this before `getOrCreate`
+  * builds the context, which is early enough for the cache to be built
+  * at graft's size. A `spark.sql.codegen.cache.maxEntries` set as a
+  * system property or in the active SparkContext's conf wins; see
+  * [[CodegenCache]].
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    CodegenCache.ensureSized()
     e.injectOptimizerRule(_ => RewriteTrivialHamming)
     e.injectOptimizerRule(_ => PreAggBeforeExpand)
     // analysis-time, not optimizer-time — see ScalarAggBankFusion's
@@ -51,9 +62,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Post-hoc installation on a live session. */
-  def install(spark: SparkSession): Unit =
+  /** Post-hoc installation on a live session. It sizes the compiled-class
+    * cache only if no code was generated in this JVM yet: a cache that is
+    * already built cannot be resized. */
+  def install(spark: SparkSession): Unit = {
+    CodegenCache.ensureSized()
     if (!spark.experimental.extraOptimizations.contains(RewriteTrivialHamming))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteTrivialHamming
+  }
 }

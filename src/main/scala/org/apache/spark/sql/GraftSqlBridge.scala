@@ -42,4 +42,9 @@ object GraftSqlBridge {
       case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
       case _ => None
     }
+
+  /** `key` in the active SparkContext's conf (`getActive` is
+    * private[spark]); None when no context is running or it is unset. */
+  def activeContextConf(key: String): Option[String] =
+    org.apache.spark.SparkContext.getActive.flatMap(_.conf.getOption(key))
 }
