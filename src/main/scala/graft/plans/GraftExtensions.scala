@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.functions.HammingDistance
+import graft.streaming.CheckpointFiles
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -34,10 +35,21 @@ object RewriteTrivialHamming extends Rule[LogicalPlan] {
   * at graft's size. A `spark.sql.codegen.cache.maxEntries` set as a
   * system property or in the active SparkContext's conf wins; see
   * [[CodegenCache]].
+  *
+  * It also makes [[CheckpointFiles]] the default streaming checkpoint
+  * file manager, once per JVM and before the context is built. Most of
+  * the per-micro-batch cost of graft's stateful streaming ops was
+  * Hadoop shell-outs: Spark's default manager renames each local
+  * offset-log, commit-log and state-delta file through `FileContext`,
+  * which forks a `readlink` per rename without libhadoop (7,416 in one
+  * `stream` benchmark run). A `spark.sql.streaming.checkpointFileManagerClass`
+  * set as a system property, through the builder's `.config` or on the
+  * session wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     CodegenCache.ensureSized()
+    CheckpointFiles.ensureDefault()
     e.injectOptimizerRule(_ => RewriteTrivialHamming)
     e.injectOptimizerRule(_ => PreAggBeforeExpand)
     // analysis-time, not optimizer-time — see ScalarAggBankFusion's
@@ -64,9 +76,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   /** Post-hoc installation on a live session. It sizes the compiled-class
     * cache only if no code was generated in this JVM yet: a cache that is
-    * already built cannot be resized. */
+    * already built cannot be resized. It sets [[CheckpointFiles]] on the
+    * session only if the session names no checkpoint file manager. */
   def install(spark: SparkSession): Unit = {
     CodegenCache.ensureSized()
+    CheckpointFiles.install(spark)
     if (!spark.experimental.extraOptimizations.contains(RewriteTrivialHamming))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteTrivialHamming
