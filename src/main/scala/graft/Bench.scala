@@ -54,19 +54,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val order = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "sorted")
     val recheck =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HEADLINE_RECHECK", "on") != "off"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build(logLevel = "WARN")
     // Message-targeted deny filters for known-benign WARN spam (the
     // unpersist flood, the global-window warning, broadcast-task-
     // binary sizes, state-store snapshot lag) — see LogHygiene for
@@ -125,22 +116,6 @@ object Bench {
         s""""codegen_compiles":$compiles,"codegen_compile_ms":$compileMs}"""
     }
     var slotCount = 0
-    def isolate(): Unit = {
-      // isolation: drop anything this query left in the SQL cache AND
-      // any pinned localCheckpoint blocks (Materialize.pin) — catalog
-      // clearCache misses those, and 100+ queries' worth of orphaned
-      // blocks degrade the shared block manager enough to triple the
-      // later iterative queries' times. The result frames are never
-      // re-read after count(), so dropping their truncated-lineage
-      // blocks is safe here.
-      spark.catalog.clearCache()
-      // blocking: async removal would land DURING the next query's
-      // run — the exact adjacency churn this isolation exists to stop
-      // (r5's order_spread_max 6.9 on a 0.3 s query right after the
-      // iterative block-heavy ones)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // `runs` executions in the slot, reporting the min: the first run
     // doubles as the warmup the r13 verdict asked for (headline
     // queries get 3 — q1_agg's 2.04x round-over-round wobble was pure
@@ -162,7 +137,7 @@ object Bench {
           errors(name) = samples.collectFirst { case Left(e) => e }.get
           -1.0
         }
-      isolate()
+      LocalSession.isolate(spark)
       timing
     }
     // Untimed warmup: absorb session/codegen/parquet-footer startup so
@@ -170,7 +145,7 @@ object Bench {
     // inflated alphabetically-first q1_agg's forward pass ~2.4x vs its
     // reversed-pass position).
     once(SparkEntry.queries("q1_agg"))
-    isolate()
+    LocalSession.isolate(spark)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     val ordered = order match {
       case "reversed" => sorted.reverse

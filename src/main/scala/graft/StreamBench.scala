@@ -229,24 +229,17 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // State-store backend: the default HDFS-backed provider keeps state
     // as in-heap immutable maps (fast, memory-bound); RocksDB keeps it
     // off-heap on disk (bounded heap, the backend Flink's comparably
     // cited numbers assume). SPARK_GRAFT_STATE_STORE=rocksdb switches —
     // COVERAGE.md documents both measurements.
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-    if (stateStore == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark: SparkSession = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSession.cpus
+    val spark: SparkSession = LocalSession.build(cpus, extra =
+      if (stateStore != "rocksdb") Nil
+      else Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

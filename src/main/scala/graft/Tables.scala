@@ -61,7 +61,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // the fan-out kill switch participates in the cache key so that
-    // flipping it mid-session (specs, CleanProbe A/Bs) really rebuilds
+    // flipping it mid-session (specs, graft.Probe fanab) really rebuilds
     // the frame — otherwise the first build's choice would be memoized
     // and conf-off could not restore the pre-r16 plan in-session
     val fanned = fannedOut.contains(name) &&
@@ -103,7 +103,7 @@ object Tables {
     * (q1_agg, q_tpch_q1, q_groupingsets), and (b) the r17-adjudicated
     * LIGHT consumers (one-pass aggregations and keyed joins whose
     * first operation is itself a shuffle), where a same-JVM fan-on/off
-    * A/B (graft.examples.FanAbProbe) showed the fan exchange is pure
+    * A/B (graft.Probe fanab) showed the fan exchange is pure
     * cost — see [[documentsUnfanned]] for the class definition and
     * OPTIMIZATION_r17.md for the per-query table. */
   def lineitemRaw(s: SparkSession, d: String): DataFrame =
@@ -140,7 +140,7 @@ object Tables {
     * round at sf0.1) with no offsetting parallel win, because the work
     * between scan and first shuffle is a few narrow expressions. The
     * call sites were adjudicated per query with a same-JVM fan-on/off
-    * A/B (graft.examples.FanAbProbe, r17 — OPTIMIZATION_r17.md carries
+    * A/B (graft.Probe fanab, r17 — OPTIMIZATION_r17.md carries
     * the table); compute-bound consumers (shingling, tokenization,
     * vector scoring) keep the fanned read. Result-identical: every
     * switched query is integer-exact or row-local (the float-sum

@@ -1,8 +1,7 @@
 package graft.examples
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 import graft.dsreal.DsScale
-import org.apache.spark.sql.SparkSession
 
 /** Empirical TPC-DS scaling probe (VERDICT r11 directive 1): run the
   * bench's 10 slowest dsreal queries on 1x / 2x / 4x / 8x the sf0.1
@@ -49,16 +48,7 @@ object DsScalingProbe {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outJson = args.lift(1).getOrElse("dsscale_out.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.build()
 
     val mults = args.lift(2).map(_.split(",").toSeq.map(_.trim.toInt))
       .getOrElse(Seq(1, 2, 4, 8))
@@ -74,12 +64,6 @@ object DsScalingProbe {
       m -> dir
     }.toMap
 
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-
     case class Cell(mult: Int, sec: Double, rows: Long, plan: String)
     val results = queries.map { q =>
       val fn = SparkEntry.queries(q)
@@ -92,9 +76,9 @@ object DsScalingProbe {
         }
         val plan = normalize(
           fn(spark, dir).queryExecution.optimizedPlan.toString)
-        isolate()
-        val (t1, n) = once(); isolate()
-        val (t2, _) = once(); isolate()
+        LocalSession.isolate(spark)
+        val (t1, n) = once(); LocalSession.isolate(spark)
+        val (t2, _) = once(); LocalSession.isolate(spark)
         val c = Cell(m, math.min(t1, t2), n, plan)
         println(f"$q%-16s mult=$m sec=${c.sec}%6.2f rows=$n")
         c

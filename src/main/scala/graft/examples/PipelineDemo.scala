@@ -19,13 +19,7 @@ import org.apache.spark.sql.functions._
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark: SparkSession = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark: SparkSession = graft.LocalSession.build(cpus = 4)
     import spark.implicits._
 
     val docs = graft.Tables.documents(spark, sfDir)

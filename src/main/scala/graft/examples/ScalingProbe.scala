@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.ext.MinHashLSH
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling probe: run the LSH dedup on 1x / 2x / 4x the
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object ScalingProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.build()
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.1")
     Seq(1, 2, 4).foreach { mult =>
       val d = (0 until mult).map(i =>

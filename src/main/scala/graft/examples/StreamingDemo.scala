@@ -18,13 +18,7 @@ object StreamingDemo {
   def t(s: Int) = new Timestamp(1700000000000L + s * 1000L)
 
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark: SparkSession = graft.LocalSession.build(cpus = 2)
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.streaming.{RetractableTopN, StreamOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Hot-key micro-bench for the r15 incremental RetractableTopN board:
@@ -16,12 +15,7 @@ object TopNHotKeyProbe {
 
   def main(args: Array[String]): Unit = {
     val events = args.headOption.map(_.toInt).getOrElse(4000)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.build(cpus = 4)
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rnd = new scala.util.Random(7)

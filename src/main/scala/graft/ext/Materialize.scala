@@ -45,7 +45,7 @@ object Materialize {
     * subplan a pin materializes — where optimizations inside operators
     * like JaccardJoin.selfJoin live — is otherwise invisible to the
     * committed plan artifacts. Drained by [[drainCapturedPlans]]
-    * (PlanDump appends the sections to its output files). The buffer
+    * (Probe dump appends the sections to its output files). The buffer
     * is per SparkSession, so sessions pinning concurrently never see
     * each other's plans, and it dies with its session. */
   val CapturePinsConf = "spark.graft.plans.capturePins"

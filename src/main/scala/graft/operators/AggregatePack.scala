@@ -34,7 +34,7 @@ object AggregatePack extends QueryPack {
 
     "q_rollup" -> ((s, d) => {
       import s.implicits._
-      // unfanned (here and q_stddev_var/q_percentile — FanAbProbe r17):
+      // unfanned (here and q_stddev_var/q_percentile — Probe fanab, r17):
       // one-pass aggregations whose partial agg IS the parallel work;
       // the fan exchange bought nothing. These ran unfanned through
       // r15 with identical oracle hashes.

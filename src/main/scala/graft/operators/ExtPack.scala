@@ -24,7 +24,7 @@ object ExtPack extends QueryPack {
     "q_dedup_exact" -> ((s, d) => {
       import s.implicits._
       // unfanned: one-pass fingerprint+groupBy — the aggregation is the
-      // query's own shuffle (FanAbProbe r17)
+      // query's own shuffle (Probe fanab, r17)
       T.documentsUnfanned(s, d)
         .groupBy(TextOps.fingerprint($"text").as("fp"))
         .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
@@ -174,7 +174,7 @@ object ExtPack extends QueryPack {
     // small scale — this corpus has O(n^2) true near-dup pairs, so the
     // pairs form is the wrong operator shape for the bench path.
     "q_minhash_lsh" -> ((s, d) =>
-      // unfanned (FanAbProbe r17): the banding window shuffles by
+      // unfanned (Probe fanab, r17): the banding window shuffles by
       // (band, bkey) immediately after the signature projection
       MinHashLSH.dedupByLSH(T.documentsUnfanned(s, d), "doc_id", "text",
         numHashes = 16, bands = 4)),
@@ -254,7 +254,7 @@ object ExtPack extends QueryPack {
       // SIZED width (r17): full-width fan lost (r16 Finding 4 measured
       // 32-wide at 1.54 vs unfanned 1.16 — every light reference paid
       // the exchange), but fully UNFANNED serializes the router/ADC
-      // scans onto one task (JobProbe r17: every stage 1-task, two
+      // scans onto one task (Probe jobs, r17: every stage 1-task, two
       // ~0.2 s serial compute jobs). One size-derived exchange
       // (~2 MB/partition, the FanOut.fanOutSized class) is the middle
       // that wins both ways and stays scale-adaptive.

@@ -42,7 +42,7 @@ object ExtPack2 extends QueryPack {
       import s.implicits._
       val b = TextOps.tokenHash32(concat(lit("split_"), $"doc_id")) % 100L
       // unfanned: pure per-row projection, no shuffle by design — the
-      // fan-out would add the query's ONLY exchange (FanAbProbe r17)
+      // fan-out would add the query's ONLY exchange (Probe fanab, r17)
       T.documentsUnfanned(s, d).select(
         $"doc_id",
         b.cast("long").as("bucket"),
@@ -64,7 +64,7 @@ object ExtPack2 extends QueryPack {
         .when($"lang" === "fr", 200000L)
         .when($"lang" === "zh", 100000L)
         .otherwise(50000L)
-      // unfanned: map-side filter+project only (FanAbProbe r17)
+      // unfanned: map-side filter+project only (Probe fanab, r17)
       T.documentsUnfanned(s, d).filter(u < ratePpm)
         .select($"doc_id", $"lang")
     }),
@@ -131,7 +131,7 @@ object ExtPack2 extends QueryPack {
     // round(double,6) fragility that broke q_substring_dedup in r4.
     "q_domain_mix" -> ((s, d) => {
       import s.implicits._
-      // unfanned: the immediate groupBy supersedes the fan (FanAbProbe)
+      // unfanned: the immediate groupBy supersedes the fan (Probe fanab)
       val per = T.documentsUnfanned(s, d)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"),
@@ -159,7 +159,7 @@ object ExtPack2 extends QueryPack {
       val budget = 256
       val n = size(TextOps.tokens($"text")).cast("long")
       // unfanned: narrow projection into the prefix-sum's own
-      // partitioning (FanAbProbe r17)
+      // partitioning (Probe fanab, r17)
       val base = T.documentsUnfanned(s, d)
         .select($"doc_id", $"source", n.as("n_tokens"))
       graft.ext.PrefixSum

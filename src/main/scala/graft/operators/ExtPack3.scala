@@ -142,7 +142,7 @@ object ExtPack3 extends QueryPack {
     // encoding (the q_dsir micro-nat pattern) is exact in any engine.
     "q_substring_dedup" -> ((s, d) => {
       import s.implicits._
-      // unfanned here and below (FanAbProbe r17): the span explode
+      // unfanned here and below (Probe fanab, r17): the span explode
       // flows straight into its own aggregation shuffle
       val spans = T.documentsUnfanned(s, d)
         .select($"doc_id", explode(spanHashes($"text")).as("span"))
@@ -247,7 +247,7 @@ object ExtPack3 extends QueryPack {
     "q_edit_distance" -> ((s, d) => {
       import s.implicits._
       // unfanned: narrow prefix projection feeding a keyed join
-      // (FanAbProbe r17)
+      // (Probe fanab, r17)
       val docs = T.documentsUnfanned(s, d)
         .select($"doc_id", substring($"text", 1, 48).as("prefix"))
       val probes = docs

@@ -97,7 +97,7 @@ object ExtPack4 extends QueryPack {
     "q_epoch_shard" -> ((s, d) => {
       import s.implicits._
       // unfanned: hash projection into the prefix-sum's own range
-      // partitioning (FanAbProbe r17)
+      // partitioning (Probe fanab, r17)
       val ids = T.documentsUnfanned(s, d).select($"doc_id",
         (TextOps.tokenHash32(concat(lit("shard_"), $"doc_id")) % 8L)
           .as("shard"),

@@ -37,7 +37,7 @@ object ExtPack6 extends QueryPack {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       // unfanned: metadata-only aggregation + per-source window — the
-      // first operation is itself a shuffle (FanAbProbe r17)
+      // first operation is itself a shuffle (Probe fanab, r17)
       val docs = T.documentsUnfanned(s, d)
       val tot = docs.groupBy($"source")
         .agg(sum($"n_chars").cast("long").as("toks"))

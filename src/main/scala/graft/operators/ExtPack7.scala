@@ -71,7 +71,7 @@ object ExtPack7 extends QueryPack {
     // (source, n_chars) — MAD is inherently two sequential medians.
     "q_mad_outliers" -> ((s, d) => {
       import s.implicits._
-      // unfanned: three metadata-only passes (FanAbProbe r17)
+      // unfanned: three metadata-only passes (Probe fanab, r17)
       val docs = T.documentsUnfanned(s, d).select($"source", $"n_chars")
       val med = docs.groupBy($"source")
         .agg(expr("CAST(percentile(2 * n_chars, 0.5) AS BIGINT)")
@@ -99,7 +99,7 @@ object ExtPack7 extends QueryPack {
       import s.implicits._
       import graft.ext.TextOps
       // unfanned: all work runs on a 1/m hash sample; every corpus
-      // reference paid the exchange, none earned it (FanAbProbe r17)
+      // reference paid the exchange, none earned it (Probe fanab, r17)
       val docsAll = T.documentsUnfanned(s, d)
       val m = graft.ext.SampleBudget.modulus(docsAll.count(), 128L)
       val sampled = docsAll
@@ -139,7 +139,7 @@ object ExtPack7 extends QueryPack {
     "q_temperature_mix" -> ((s, d) => {
       import s.implicits._
       val budget = 1000000L
-      // unfanned: immediate groupBy supersedes the fan (FanAbProbe r17)
+      // unfanned: immediate groupBy supersedes the fan (Probe fanab, r17)
       val perLang = T.documentsUnfanned(s, d)
         .groupBy($"lang")
         .agg(sum(size(graft.ext.TextOps.tokens($"text")).cast("long"))

@@ -150,7 +150,7 @@ object RelationalPack extends QueryPack {
       import s.implicits._
       T.customer(s, d)
         .join(T.orders(s, d), $"c_custkey" === $"o_custkey")
-        // unfanned (FanAbProbe r17): the join re-shuffles by
+        // unfanned (Probe fanab, r17): the join re-shuffles by
         // l_orderkey at session width anyway; the width-5 fan exchange
         // in front of it was pure cost
         .join(T.lineitemRaw(s, d), $"o_orderkey" === $"l_orderkey")

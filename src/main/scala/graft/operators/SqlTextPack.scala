@@ -57,8 +57,8 @@ object SqlTextPack extends QueryPack {
     * oracles, the only seven NOT in the battery are the documented
     * value-add asymmetries (q14a/q14b/q23a/q23b/q64/q75: raw text
     * re-plans shared WITH frames the twins pin via runtime
-    * materialization — the [[graft.plans.CtePin]] prototype shows a
-    * post-hoc rule CAN pin them from text but cannot COST the
+    * materialization — the r16 `CtePin` prototype, deleted in r17,
+    * showed a post-hoc rule CAN pin them from text but cannot COST the
     * decision, winning ~1.9x on q14a/q75 and losing on q23a; q77:
     * raw text plans a cartesian) — see the batch notes below and
     * COVERAGE.md's rule-reachability table. */
@@ -153,7 +153,7 @@ object SqlTextPack extends QueryPack {
 
   private[graft] def registerStar(s: SparkSession, d: String): Unit = {
     // the fan-out kill switch joins the key: a mid-session conf flip
-    // (FusionRuleSpec's fan-out-off leg, CleanProbe A/Bs) must re-bind
+    // (FusionRuleSpec's fan-out-off leg, graft.Probe fanab) must re-bind
     // the views to freshly built frames, not keep serving the plans
     // built under the previous setting
     val key = d + (if (s.conf.get(graft.ext.FanOut.EnabledConf,

@@ -113,7 +113,7 @@ object TpcdsShapePack extends QueryPack {
     // are both restricted to the same derived set. The initial physical
     // plan duplicates the CTE subtree, but AQE's runtime stage cache
     // keys on the canonicalized exchange, so the second consumer gets a
-    // ReusedExchange of the CTE broadcast (verified via PlanProbe:
+    // ReusedExchange of the CTE broadcast (verified via Probe plan:
     // final plan has 3 scans / reused=1, not 2 countDistinct pipelines).
     "q_tpcds_cte_reuse" -> ((s, d) => {
       import s.implicits._
@@ -141,7 +141,7 @@ object TpcdsShapePack extends QueryPack {
         sum(when($"l_quantity" >= lo && $"l_quantity" < hi &&
           (if (cheap) $"l_discount" < 0.05 else $"l_discount" >= 0.05), 1L)
           .otherwise(0L))
-      // unfanned (FanAbProbe r17): single global partial-agg pass
+      // unfanned (Probe fanab, r17): single global partial-agg pass
       T.lineitemRaw(s, d).agg(
         bucket(1, 10, true).as("b1_cheap"), bucket(1, 10, false).as("b1_deep"),
         bucket(10, 20, true).as("b2_cheap"), bucket(10, 20, false).as("b2_deep"),

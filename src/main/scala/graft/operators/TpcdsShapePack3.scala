@@ -46,7 +46,7 @@ object TpcdsShapePack3 extends QueryPack {
       import s.implicits._
       val anchor = to_date(lit("1995-01-02"))
       def yearFrame(y: Int, out: String) =
-        // unfanned (FanAbProbe r17): filter+derive straight into the
+        // unfanned (Probe fanab, r17): filter+derive straight into the
         // per-week aggregation shuffle
         T.lineitemRaw(s, d)
           .filter(year($"l_shipdate") === y)

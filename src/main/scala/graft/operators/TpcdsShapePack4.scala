@@ -74,7 +74,7 @@ object TpcdsShapePack4 extends QueryPack {
       def band(lo: Int, hi: Int) =
         countDistinct(when($"l_quantity" >= lo && $"l_quantity" < hi,
           centsCol($"l_extendedprice")))
-      // unfanned (FanAbProbe r17): single global distinct-agg pass
+      // unfanned (Probe fanab, r17): single global distinct-agg pass
       T.lineitemRaw(s, d).agg(
         band(1, 13).as("d1"), band(13, 25).as("d2"),
         band(25, 37).as("d3"), band(37, 51).as("d4"),

@@ -296,7 +296,7 @@ object TpchPack2 extends QueryPack {
     // Q19: disjunctive brand/size/quantity predicates in one join.
     "q_tpch_q19" -> ((s, d) => {
       import s.implicits._
-      // unfanned (FanAbProbe r17): lineitem streams into a broadcast
+      // unfanned (Probe fanab, r17): lineitem streams into a broadcast
       // join + global agg — map-side all the way, the fan bought nothing
       T.lineitemRaw(s, d).join(T.part(s, d),
           $"l_partkey" === $"p_partkey" && (

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Blast-radius census for the injected Catalyst rules (shared by
-  * [[graft.examples.RuleFireProbe]] and the in-suite RuleCensusSpec —
+  * `graft.Probe census` and the in-suite RuleCensusSpec —
   * judge r15 directives 4 and 8): for one query, does each rule's
   * kill-switch change the plan? Planning only, nothing executes.
   *

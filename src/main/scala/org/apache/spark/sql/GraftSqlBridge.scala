@@ -23,12 +23,13 @@ object GraftSqlBridge {
   def autoBroadcastThreshold(spark: SparkSession): Long =
     spark.sessionState.conf.autoBroadcastJoinThreshold
 
-  /** A DataFrame over an already-analyzed logical plan (Dataset.ofRows
-    * is private[sql]) — used by the CtePin prototype to execute a CTE
-    * def body it extracted during analysis. */
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** Blocks until every listener-bus event posted so far has been
+    * delivered (`listenerBus` is private[spark]). Job and SQL-execution
+    * events are posted before the action that caused them returns, so
+    * after this a listener has seen all of that action's events — no
+    * fixed sleep or poll-until-stable loop needed. */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** The persisted RDD behind a checkpointed/pinned DataFrame — lets
     * iterative operators release superseded rounds DETERMINISTICALLY

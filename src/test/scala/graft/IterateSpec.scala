@@ -6,6 +6,7 @@ import graft.ext.{Iterate, Materialize, VertexLoop}
 import graft.operators.IteratePack
 import org.apache.spark.HashPartitioner
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,11 +22,11 @@ object AdjacencyEvaluations { val count = new AtomicInteger }
 class IterateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** Blocks until the asynchronous listener bus stops moving `n`. */
+  /** `n` once the asynchronous listener bus has delivered every event
+    * posted so far. */
   private def quiesce(n: AtomicInteger): Int = {
-    var prev = -1; var cur = n.get()
-    while (cur != prev) { prev = cur; Thread.sleep(200); cur = n.get() }
-    cur
+    GraftSqlBridge.awaitListeners(spark)
+    n.get()
   }
 
   test("vertex loop cadence: q_bfs_levels and q_pagerank run exactly " +
@@ -178,8 +179,8 @@ class IterateSpec extends AnyFunSuite {
     try {
       val n = SparkEntry.queries("q_bfs_levels")(spark, TestSpark.sf).count()
       assert(n > 0)
-      var prev = -1; var cur = extraActions.get()
-      while (cur != prev) { prev = cur; Thread.sleep(200); cur = extraActions.get() }
+      GraftSqlBridge.awaitListeners(spark)
+      val cur = extraActions.get()
       assert(cur == 0,
         s"BFS ran $cur isEmpty/collect actions — per-round convergence " +
           "scans crept back in")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Materialize's conf-gated pinned-subplan capture (plan-evidence
   * tooling: a top-level explain stops at a pin's ExistingRDD scan, so
-  * PlanDump drains this capture to record what the pin job actually
+  * Probe dump drains this capture to record what the pin job actually
   * ran — e.g. the PPJoin verification joins inside
   * JaccardJoin.selfJoin, invisible from q_ngram_jaccard's final plan).
   */

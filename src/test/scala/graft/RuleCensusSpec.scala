@@ -7,12 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** In-suite blast-radius census for the injected Catalyst rules over
   * the SQL-text battery (judge r15 directive 8): a future rule edit
   * that widens (or silently loses) a rule's fire set fails HERE in
-  * `sbt test` instead of waiting for a judge's RuleFireProbe re-run.
+  * `sbt test` instead of waiting for a full `graft.Probe census` re-run.
   * Scoped to the 98-entry SQL-text battery because raw `spark.sql`
   * texts are the rules' audience (the DataFrame twins hand-build their
   * plans) and plan-only censusing of these is cheap; the full-battery
-  * sweep stays in [[graft.examples.RuleFireProbe]] (verify skill
-  * step 6).
+  * sweep is `graft.Probe census` (verify skill step 6).
   *
   * The expected sets are exact: a query NOT listed must census as
   * no-fire AND stable — the r15 probe had a 40-query UNSTABLE blind
@@ -62,7 +61,7 @@ class RuleCensusSpec extends AnyFunSuite {
         .collect { case (k, true) => k }
       assert(fired == expected,
         s"$name fired $fired, pinned $expected — if the rule change is " +
-          "intentional, re-run graft.examples.RuleFireProbe and update " +
+          "intentional, re-run graft.Probe census and update " +
           "this spec + COVERAGE.md together")
     }
   }

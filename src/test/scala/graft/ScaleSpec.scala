@@ -341,9 +341,9 @@ class ScaleSpec extends AnyFunSuite {
       assert(cc.length == 16 && cc.forall(_._2 == 0L))
       val rounds = ConnectedComponents.lastRunRounds
       assert(rounds >= 2, s"chain-16 should take multiple rounds, got $rounds")
-      // the listener bus is async: poll to quiescence
-      var prev = -1; var cur = actions.get()
-      while (cur != prev) { prev = cur; Thread.sleep(200); cur = actions.get() }
+      // the listener bus is async: drain it before reading the count
+      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
+      val cur = actions.get()
       // actions = 1 initial-labels pin + 1 up-front label count (r16:
       // feeds the per-round join-strategy hint — constant across
       // rounds, NOT per-round) + 1 pin per round; the pre-r8 code paid
