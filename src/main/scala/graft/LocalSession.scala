@@ -12,8 +12,20 @@ import org.apache.spark.sql.SparkSession
 object LocalSession {
 
   /** `SPARK_GRAFT_CPUS`, else the JVM's available processors. */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors)
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"),
+    Runtime.getRuntime.availableProcessors)
+
+  /** Parses a `SPARK_GRAFT_CPUS` value: unset or blank falls back to
+    * `processors`; a non-integer or a count below 1 (which would build
+    * `local[0]`, rejected by Spark with an unrelated message) is rejected
+    * with a message naming the variable. */
+  def parseCpus(value: Option[String], processors: Int): Int =
+    value.map(_.trim).filter(_.nonEmpty) match {
+      case None => processors
+      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS='$v' is not a core count (an integer >= 1)"))
+    }
 
   /** Parses a `SPARK_GRAFT_CONFS` value (the conf overrides
     * [[graft.Probe]] passes to [[build]] for kill-switch A/Bs):

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
@@ -40,7 +39,7 @@ object CodegenCache {
     if (userValue.isDefined) None else Some(Entries)
 
   private lazy val sized: Unit =
-    entriesFor(sys.props.get(Key).orElse(GraftSqlBridge.activeContextConf(Key)))
+    entriesFor(GraftExtensions.userConf(Key))
       .foreach { n =>
         // CodeGenerator's initialiser builds the cache from SQLConf.get;
         // reading the object runs it with `conf` in scope (no effect if

@@ -1,8 +1,9 @@
 package graft.plans
 
+import graft.fs.LocalFiles
 import graft.functions.HammingDistance
 import graft.streaming.CheckpointFiles
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -45,11 +46,20 @@ object RewriteTrivialHamming extends Rule[LogicalPlan] {
   * `stream` benchmark run). A `spark.sql.streaming.checkpointFileManagerClass`
   * set as a system property, through the builder's `.config` or on the
   * session wins.
+  *
+  * Likewise it makes [[LocalFiles]] the `file:` file system
+  * (`spark.hadoop.fs.file.impl`), once per JVM and before the context is
+  * built. Without libhadoop, Hadoop's local file system forks a `chmod`
+  * for every file and directory it creates (2,211 in one `stream` run);
+  * [[LocalFiles]] sets the same mode bits through java.nio and keeps the
+  * `.crc` sidecars. A value set as a system property, through the
+  * builder's `.config` or in the active SparkContext's conf wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     CodegenCache.ensureSized()
     CheckpointFiles.ensureDefault()
+    LocalFiles.ensureDefault()
     e.injectOptimizerRule(_ => RewriteTrivialHamming)
     e.injectOptimizerRule(_ => PreAggBeforeExpand)
     // analysis-time, not optimizer-time — see ScalarAggBankFusion's
@@ -74,10 +84,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** `key` as the user set it: a JVM system property (`-D...`, or
+    * spark-submit's `--conf`), else the active SparkContext's conf. A value
+    * given only through `SparkSession.builder().config(...)` is not visible
+    * at extension time. */
+  private[graft] def userConf(key: String): Option[String] =
+    sys.props.get(key).orElse(GraftSqlBridge.activeContextConf(key))
+
+  /** Makes `value` the default of `key` for SparkContexts built after this
+    * call, unless the user set it ([[userConf]]). A system property reaches
+    * the SparkConf that `getOrCreate` builds next, and from there every
+    * session's conf; a builder `.config` or a session conf overrides it. */
+  private[graft] def defaultConf(key: String, value: String): Unit =
+    if (userConf(key).isEmpty) sys.props(key) = value
+
   /** Post-hoc installation on a live session. It sizes the compiled-class
     * cache only if no code was generated in this JVM yet: a cache that is
     * already built cannot be resized. It sets [[CheckpointFiles]] on the
-    * session only if the session names no checkpoint file manager. */
+    * session only if the session names no checkpoint file manager.
+    *
+    * It leaves the `file:` file system alone: Hadoop caches one instance
+    * per scheme and user for the JVM, built by whichever conf asked first,
+    * so a live session's file system cannot be swapped, and setting
+    * `fs.file.impl` on its Hadoop conf would only reach callers that
+    * bypass the cache. Build the session with the extension
+    * (`withExtensions`) to get [[LocalFiles]]. */
   def install(spark: SparkSession): Unit = {
     CodegenCache.ensureSized()
     CheckpointFiles.install(spark)

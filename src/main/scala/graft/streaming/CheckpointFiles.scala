@@ -1,8 +1,9 @@
 package graft.streaming
 
+import graft.plans.GraftExtensions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter}
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -28,6 +29,11 @@ import org.apache.spark.sql.internal.SQLConf
   * guarantee: `createAtomic` output stays invisible until `close`.
   * `LocalFileSystem` is a `ChecksumFileSystem` like `FileContext`'s
   * `LocalFs`, so `.crc` sidecars are still written and verified.
+  *
+  * The files themselves are created by whatever `file:` file system the
+  * Hadoop conf names. In graft sessions that is [[graft.fs.LocalFiles]],
+  * which sets each new file's permission without forking the `chmod`
+  * that stock `RawLocalFileSystem` runs per file and per `.crc`.
   */
 class CheckpointFiles(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
@@ -74,13 +80,9 @@ object CheckpointFiles {
   def defaultFor(userValue: Option[String]): Option[String] =
     if (userValue.isDefined) None else Some(Name)
 
-  // A system property reaches the SparkConf that `getOrCreate` builds
-  // next, and from there every session's SQLConf and the Hadoop conf
-  // each query hands to CheckpointFileManager.create. A builder
-  // `.config` or a session conf set later overrides it.
-  private lazy val defaulted: Unit =
-    defaultFor(sys.props.get(Key).orElse(GraftSqlBridge.activeContextConf(Key)))
-      .foreach(name => sys.props(Key) = name)
+  // the session confs carry it into the Hadoop conf each query hands to
+  // CheckpointFileManager.create
+  private lazy val defaulted: Unit = GraftExtensions.defaultConf(Key, Name)
 
   /** Makes [[CheckpointFiles]] the default for SparkContexts built after
     * this call, unless the key is set as a system property or in the

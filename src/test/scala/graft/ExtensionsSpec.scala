@@ -1,7 +1,11 @@
 package graft
 
+import java.net.URI
+
+import graft.fs.LocalFiles
 import graft.functions.HammingDistance.hamming
 import graft.plans.GraftExtensions
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,5 +32,18 @@ class ExtensionsSpec extends AnyFunSuite {
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.toLowerCase.contains("hammingdistance"), opt)
     df.count() // executes fine with the native expression in the filter
+  }
+
+  test("install on a live session leaves the file: file system alone") {
+    val s = spark.newSession()
+    val hadoopConf = s.sparkContext.hadoopConfiguration
+    def state = (sys.props.get(LocalFiles.Key), hadoopConf.get("fs.file.impl"),
+      s.conf.getOption(LocalFiles.Key))
+    val before = state
+    val fs = FileSystem.get(URI.create("file:///"), hadoopConf)
+    GraftExtensions.install(s)
+    assert(state == before)
+    assert(FileSystem.get(URI.create("file:///"), hadoopConf) eq fs,
+      "Hadoop's cached instance keeps serving")
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `SPARK_GRAFT_CONFS` parsing in [[LocalSession]] — pure, no session. */
+/** `SPARK_GRAFT_CONFS` and `SPARK_GRAFT_CPUS` parsing in [[LocalSession]]
+  * — pure, no session. */
 class LocalSessionSpec extends AnyFunSuite {
 
   test("confs: empty entries and an empty value are skipped") {
@@ -21,5 +22,21 @@ class LocalSessionSpec extends AnyFunSuite {
 
   test("confs: the value keeps every '=' after the first") {
     assert(LocalSession.parseConfs("k=v=w") == Seq("k" -> "v=w"))
+  }
+
+  test("cpus: unset or blank falls back to the processor count") {
+    Seq(None, Some(""), Some("  ")).foreach(v =>
+      assert(LocalSession.parseCpus(v, processors = 6) == 6, v))
+    assert(LocalSession.parseCpus(Some(" 3 "), processors = 6) == 3)
+    assert(LocalSession.parseCpus(Some("512"), processors = 6) == 512)
+  }
+
+  test("cpus: a non-integer or a count below 1 is rejected by name") {
+    Seq("0", "-2", "four", "2.5", "99999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        LocalSession.parseCpus(Some(v), processors = 6))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$v'"),
+        e.getMessage)
+    }
   }
 }
