@@ -1,8 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeRow}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{BinaryType, DayTimeIntervalType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.CalendarInterval
 
 /** Streaming core (SURVEY.md §7.2 M2/M3): watermarked window aggs,
   * changelog conventions, streaming dedup, stream-stream interval join.
@@ -20,9 +28,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    Deduplicate keep-last (StreamExecDeduplicate.java:85) ->
   *    flatMapGroupsWithState keeping the last row per key
   *  - DropUpdateBefore (StreamExecDropUpdateBefore.java:55) -> filter
-  *  - Interval join (StreamExecIntervalJoin.java:82) -> native Spark
-  *    stream-stream join with a time-range condition + watermarks (state
-  *    is bounded by the range exactly like Flink's TimeIntervalJoin)
+  *  - Interval join (StreamExecIntervalJoin.java:82 planning
+  *    OP/join/interval/TimeIntervalJoin.java) -> [[intervalJoin]]: both
+  *    sides buffered in keyed state, dropped by watermark-driven
+  *    event-time timers, as in Flink's TimeIntervalJoin
   */
 object StreamOps {
 
@@ -305,18 +314,169 @@ object StreamOps {
       deliver(batch.orderBy(order: _*)); ()
     }
 
-  /** Stream-stream interval join: right rows within [leftTs - before,
-    * leftTs + after] on equal keys. Both sides MUST carry watermarks so
-    * Spark can GC join state (same bound Flink derives in
-    * TimeIntervalJoin). */
+  /** Stream-stream interval join (reference OP/join/interval/
+    * TimeIntervalJoin.java): every pair of a left and a right row on
+    * equal, non-null keys whose right time lies in
+    * [leftTs - before, leftTs + after], emitted once, as all left
+    * columns followed by all right columns. `before`/`after` are
+    * fixed-length interval texts (`"10 milliseconds"`, `"30 MINUTES"`).
+    *
+    * A graft keyed operator, not Spark's stream-stream join: the two
+    * sides are unioned, tagged, and keyed on the join key; each key's
+    * state holds both sides' buffered rows. An arriving row meets the
+    * other side's buffered rows and this micro-batch's new ones. A left
+    * row at `t` is dropped once the watermark reaches `t + after` (no
+    * later right row can match it), a right row once it reaches
+    * `t + before`, and an event-time timer at the earliest such point
+    * clears keys that see no more rows. A row at or behind the previous
+    * batch's watermark is late: dropped before the join and counted in
+    * the operator's `numRowsDroppedByWatermark`. These are the rules of
+    * Spark's own stream-stream join, and the two emit the same rows in
+    * the same micro-batch (IntervalJoinSpec).
+    *
+    * Streams: both sides MUST carry a watermark on their time column
+    * (`withWatermark`), or their buffers would never be dropped; a side
+    * without one is rejected here. Output is append-only and carries no
+    * watermark of its own. Two batch DataFrames join in one pass;
+    * a stream and a batch DataFrame are rejected (join a static side
+    * with a plain join). */
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String,
-      before: String, after: String): DataFrame =
-    // qualify the ts columns through their side: unqualified col(...)
-    // is AMBIGUOUS_REFERENCE when both sides name their event time the
-    // same way (the common two-instances-of-one-schema case)
-    left.join(right,
-      left(key) === right(key) &&
-        right(rightTs) >= left(leftTs) - expr(s"INTERVAL $before") &&
-        right(rightTs) <= left(leftTs) + expr(s"INTERVAL $after"))
+      before: String, after: String): DataFrame = {
+    require(left.isStreaming == right.isStreaming,
+      "intervalJoin: join two streams or two batch DataFrames; " +
+        "a static side joins a stream with a plain join")
+    Seq((left, "left", leftTs), (right, "right", rightTs)).foreach { case (df, side, ts) =>
+      val f = df.schema(ts)
+      require(f.dataType == TimestampType || f.dataType == TimestampNTZType,
+        s"intervalJoin: the $side side's time column `$ts` is ${f.dataType.sql}, not a timestamp")
+      require(!df.isStreaming || f.metadata.contains(EventTimeWatermark.delayKey),
+        s"intervalJoin: the $side side's time column `$ts` carries no watermark; " +
+          s"""call withWatermark("$ts", <delay>) on the $side stream, or its """ +
+          "buffered rows are never dropped")
+    }
+    val beforeUs = fixedMicros(before)
+    val afterUs = fixedMicros(after)
+    // quote every column: a name with a dot must not read as a field path
+    def cols(df: DataFrame) = df.columns.map(c => df.col(s"`${c.replace("`", "``")}`"))
+    def tagged(df: DataFrame, ts: String, isLeft: Boolean, other: StructType) = {
+      val self = struct(cols(df).toIndexedSeq: _*)
+      val none = lit(null).cast(other)
+      // the time column keeps its watermark metadata through the alias,
+      // so FlatMapGroupsWithStateExec drops late rows of either side
+      df.select(df(key).as("k"), df(ts).as("ets"),
+        (if (isLeft) self else none).as("l"), (if (isLeft) none else self).as("r"))
+    }
+    val (lType, rType) = (left.schema, right.schema)
+    val input = tagged(left, leftTs, isLeft = true, rType)
+      .union(tagged(right, rightTs, isLeft = false, lType))
+    val joiner = new IntervalJoiner(lType, rType, lType.fieldIndex(leftTs),
+      rType.fieldIndex(rightTs), beforeUs, afterUs, left.isStreaming)
+    input.groupBy(col("k"))
+      .as[Row, Row](Encoders.row(StructType(Seq(input.schema("k")))),
+        Encoders.row(input.schema))
+      .flatMapGroupsWithState[Row, Row](OutputMode.Append(),
+        if (left.isStreaming) GroupStateTimeout.EventTimeTimeout()
+        else GroupStateTimeout.NoTimeout())(joiner.apply)(
+        Encoders.row(new StructType()
+          .add("l", BinaryType, nullable = false).add("r", BinaryType, nullable = false)),
+        Encoders.row(StructType(lType.fields ++ rType.fields)))
+  }
+
+  /** Micros of a fixed-length interval text, parsed as `INTERVAL <text>`
+    * is in SQL. */
+  private def fixedMicros(bound: String): Long =
+    CatalystSqlParser.parseExpression(s"INTERVAL $bound") match {
+      case Literal(us: Long, _: DayTimeIntervalType) => us
+      case Literal(i: CalendarInterval, _) if i.months == 0 =>
+        i.days * 86400000000L + i.microseconds
+      case _ => throw new IllegalArgumentException(
+        s"intervalJoin: bound '$bound' is not a fixed-length interval")
+    }
+
+  /** One key's step of [[intervalJoin]]. Input rows are (k, ets, l, r)
+    * with one of l/r set; state is (l, r): each side's buffered rows as
+    * length-prefixed UnsafeRow bytes, so a row's time (micros) is read
+    * without decoding it, and only a matched row is turned back into a
+    * Row. A null time never matches and is not buffered. */
+  private final class IntervalJoiner(lSchema: StructType, rSchema: StructType,
+      lt: Int, rt: Int, beforeUs: Long, afterUs: Long, streaming: Boolean)
+      extends Serializable {
+    // Resolved once, here: an encoder resolved per batch or per task gets
+    // fresh lambda-variable ids for array/map fields, so its generated
+    // code would be compiled again each time.
+    private val lEnc = ExpressionEncoder(lSchema).resolveAndBind()
+    private val rEnc = ExpressionEncoder(rSchema).resolveAndBind()
+    @transient private lazy val lTo = lEnc.createSerializer()
+    @transient private lazy val lFrom = lEnc.createDeserializer()
+    @transient private lazy val rTo = rEnc.createSerializer()
+    @transient private lazy val rFrom = rEnc.createDeserializer()
+
+    /** A buffered row: its time, its bytes, and the Row it arrived as in
+      * this batch (null once buffered). */
+    private type Held = (Long, UnsafeRow, Row)
+
+    private def held(rows: Iterator[Row], to: Row => InternalRow, ts: Int): Vector[Held] =
+      rows.map(r => (to(r).asInstanceOf[UnsafeRow].copy(), r))
+        .filterNot(_._1.isNullAt(ts)).map { case (u, r) => (u.getLong(ts), u, r) }.toVector
+
+    private def unpack(bytes: Array[Byte], fields: Int, ts: Int): Vector[Held] = {
+      val buf = java.nio.ByteBuffer.wrap(bytes)
+      val out = Vector.newBuilder[Held]
+      while (buf.hasRemaining) {
+        val size = buf.getInt()
+        val u = new UnsafeRow(fields)
+        u.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + buf.position(), size)
+        buf.position(buf.position() + size)
+        out += ((u.getLong(ts), u, null))
+      }
+      out.result()
+    }
+
+    private def pack(rows: Seq[Held]): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(rows.map(_._2.getSizeInBytes + 4).sum)
+      rows.foreach { h => buf.putInt(h._2.getSizeInBytes); h._2.writeTo(buf) }
+      buf.array()
+    }
+
+    def apply(k: Row, rows: Iterator[Row], state: GroupState[Row]): Iterator[Row] = {
+      // a null key joins nothing (Spark's join skips it the same way)
+      if (k.isNullAt(0)) return Iterator.empty
+      val wmUs = if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MinValue
+      // a left row can meet no later right row once the watermark reaches
+      // t + after; a right row no later left row once it reaches t + before
+      def lLive(h: Held) = h._1 + afterUs > wmUs
+      def rLive(h: Held) = h._1 + beforeUs > wmUs
+      val (oldL, oldR) = state.getOption.fold((Vector.empty[Held], Vector.empty[Held])) { s =>
+        (unpack(s.getAs[Array[Byte]](0), lSchema.length, lt),
+          unpack(s.getAs[Array[Byte]](1), rSchema.length, rt))
+      }
+      val (lIn, rIn) = rows.partition(!_.isNullAt(2))
+      val newL = held(lIn.map(_.getStruct(2)), lTo, lt)
+      val newR = held(rIn.map(_.getStruct(3)), rTo, rt)
+      val out = Vector.newBuilder[Row]
+      def pairs(ls: Seq[Held], rs: Seq[Held]): Unit =
+        for (l <- ls; r <- rs; d = r._1 - l._1; if d >= -beforeUs && d <= afterUs) {
+          val lRow = if (l._3 != null) l._3 else lFrom(l._2)
+          val rRow = if (r._3 != null) r._3 else rFrom(r._2)
+          out += Row.fromSeq(lRow.toSeq ++ rRow.toSeq)
+        }
+      pairs(newL, oldR)
+      val ls = oldL ++ newL
+      pairs(ls, newR)
+      if (streaming) {
+        val keepL = ls.filter(lLive)
+        val keepR = (oldR ++ newR).filter(rLive)
+        if (keepL.isEmpty && keepR.isEmpty) state.remove()
+        else {
+          state.update(Row(pack(keepL), pack(keepR)))
+          // fire once the watermark reaches the earliest drop point: a
+          // timer at T fires when the watermark passes T
+          val dropUs = (keepL.map(_._1 + afterUs) ++ keepR.map(_._1 + beforeUs)).min
+          state.setTimeoutTimestamp(Math.floorDiv(dropUs + 999L, 1000L) - 1L)
+        }
+      }
+      out.result().iterator
+    }
+  }
 }
