@@ -64,19 +64,11 @@ object Tables {
     // flipping it mid-session (specs, graft.Probe fanab) really rebuilds
     // the frame — otherwise the first build's choice would be memoized
     // and conf-off could not restore the pre-r16 plan in-session
-    val fanned = fannedOut.contains(name) &&
-      spark.conf.get(graft.ext.FanOut.EnabledConf, "true").toBoolean
-    // width confs ride through the key too (same honesty rule: a
-    // mid-session conf change must rebuild, not serve the stale frame)
-    val widthKey =
-      spark.conf.getOption(graft.ext.FanOut.PartitionsConf).map("#p" + _)
-        .getOrElse("") +
-      spark.conf.getOption(graft.ext.FanOut.TargetBytesConf).map("#t" + _)
-        .getOrElse("")
+    val fanned = fannedOut.contains(name) && graft.ext.FanOut.enabled(spark)
     SessionCaches.perSession(frameCache, spark)(
       new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
       .computeIfAbsent(
-        (dir, if (fanned) name + widthKey else name + "#nofan"), _ => {
+        (dir, if (fanned) name else name + "#nofan"), _ => {
         val raw =
           if (name == "events") buildEvents(spark, dir)
           else if (name == "embeddings") buildEmbeddings(spark, dir)

@@ -69,13 +69,7 @@ object DsTables {
     // its derivatives embed the (possibly fanned) lineitem scan, so a
     // mid-session conf flip must rebuild rather than return the cached
     // pre-flip frame (same contract as Tables.load)
-    val k = (d,
-      (if (s.conf.get(graft.ext.FanOut.EnabledConf, "true").toBoolean) name
-       else name + "#nofan") +
-        s.conf.getOption(graft.ext.FanOut.PartitionsConf)
-          .map("#p" + _).getOrElse("") +
-        s.conf.getOption(graft.ext.FanOut.TargetBytesConf)
-          .map("#t" + _).getOrElse(""))
+    val k = (d, graft.ext.FanOut.keyed(s, name))
     val hit = perSession.get(k)
     if (hit != null) hit
     else {

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Scale-adaptive fan-out for small scans feeding expensive work
   * (optimization guide §2.5 "input skew" / §6 input-split sizing).
@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * [[fanOut]] repartitions the frame to the session's default
   * parallelism — but ONLY while the optimizer's size estimate is under
-  * `spark.graft.fanout.maxInputBytes` (default 256 MB): in that regime
+  * [[MaxInputBytes]] (256 MB): in that regime
   * the extra exchange moves a bounded, trivial number of bytes and
   * unlocks every core for the work above it; past the threshold real
   * inputs carry many row groups/files, the scan is already parallel,
@@ -34,20 +34,33 @@ import org.apache.spark.sql.{Column, DataFrame}
   * keyless repartition sort its input first).
   *
   * Kill switch: `spark.graft.fanout.enabled=false` restores the
-  * pre-r16 plans byte-for-byte.
+  * pre-r16 plans byte-for-byte. It is the one fan-out option.
   */
 object FanOut {
   val EnabledConf = "spark.graft.fanout.enabled"
-  val MaxBytesConf = "spark.graft.fanout.maxInputBytes"
-  val PartitionsConf = "spark.graft.fanout.partitions"
-  val TargetBytesConf = "spark.graft.fanout.targetPartitionBytes"
+
+  /** Largest plan-estimated input that is fanned out. */
+  private val MaxInputBytes = 256L << 20
+
+  /** Input bytes per partition of [[fanOutSized]]. */
+  private val TargetPartitionBytes = 2L << 20
+
+  def enabled(spark: SparkSession): Boolean =
+    spark.conf.get(EnabledConf, "true").toBoolean
+
+  /** `key` for a memo of frames built through the fan-out: a frame
+    * built with the kill switch flipped gets another key, so a
+    * mid-session flip (specs, `graft.Probe fanab`) rebuilds the frame
+    * instead of serving the one built under the previous setting. */
+  def keyed(spark: SparkSession, key: String): String =
+    if (enabled(spark)) key else key + "#nofan"
 
   /** Fan width for COMPUTE-BOUND consumers (vector scoring, shingling/
     * tokenization, row-expansion, encode+write): the work above the
     * exchange dwarfs per-task overhead, so every core pays off —
     * width = the session's default parallelism. */
   def fanOut(df: DataFrame, keys: Column*): DataFrame =
-    fanned(df, keys, None)
+    fanned(df, keys, sized = false)
 
   /** Fan width for DERIVATION/IO-BOUND consumers (column derivation,
     * broadcast-join probe pipelines, aggregation): measured r16 (clean
@@ -55,35 +68,28 @@ object FanOut {
     * q_dsreal_q48 0.52 s at width 4 vs 0.83 s at width 32, and every
     * additional task only adds launch/stage overhead to the ~80 cheap
     * queries sharing the table. Width therefore derives from the
-    * INPUT SIZE (one partition per `targetPartitionBytes`, default
-    * 2 MB, clamped to [2, defaultParallelism]) — scale-adaptive in
+    * INPUT SIZE (one partition per [[TargetPartitionBytes]], 2 MB,
+    * clamped to [2, defaultParallelism]) — scale-adaptive in
     * both directions, never a constant tuned to one box. */
   def fanOutSized(df: DataFrame, keys: Column*): DataFrame =
-    fanned(df, keys, Some(()))
+    fanned(df, keys, sized = true)
 
   private def fanned(df: DataFrame, keys: Seq[Column],
-      sized: Option[Unit]): DataFrame = {
+      sized: Boolean): DataFrame = {
     require(keys.nonEmpty, "fanOut needs at least one partitioning key")
     val spark = df.sparkSession
-    if (!spark.conf.get(EnabledConf, "true").toBoolean) df
+    if (!enabled(spark)) df
     else {
-      val maxBytes =
-        spark.conf.get(MaxBytesConf, (256L << 20).toString).toLong
       // plan-level estimate (file bytes for a parquet scan): no job,
       // no listing beyond what the scan itself already did
       val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= maxBytes) {
+      if (est <= MaxInputBytes) {
         val para = spark.sparkContext.defaultParallelism
-        val parts = spark.conf.getOption(PartitionsConf) // probe A/Bs
-          .map(_.toInt)
-          .getOrElse(sized match {
-            case Some(_) =>
-              val target = spark.conf
-                .get(TargetBytesConf, (2L << 20).toString).toLong
-              val byBytes = (est / target).toLong
-              math.max(2L, math.min(para.toLong, byBytes)).toInt
-            case None => para
-          })
+        val parts =
+          if (sized) {
+            val byBytes = (est / TargetPartitionBytes).toLong
+            math.max(2L, math.min(para.toLong, byBytes)).toInt
+          } else para
         df.repartition(parts, keys: _*)
       } else df
     }

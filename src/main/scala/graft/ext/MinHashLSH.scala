@@ -77,8 +77,9 @@ object MinHashLSH {
     * collide (dedupByLSH's one-hop rep assignment would split them).
     * Edges are doc -> bucket-minimum only (O(n * bands), never the
     * in-bucket clique), then [[ConnectedComponents]] resolves the
-    * transitive closure. Output: doc_id, cluster_id (= min doc id in
-    * the cluster), is_dup. */
+    * transitive closure. `idCol` must be of an integral type (see
+    * [[ConnectedComponents.run]]). Output: doc_id, cluster_id (= min doc
+    * id in the cluster; both BIGINT), is_dup. */
   def clusters(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4): DataFrame =
     ConnectedComponents.run(docs.select(col(idCol).as("id")),

@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-/** Co-partitioned vertex iteration: the graph-shaped counterpart of
-  * [[Iterate]] (reference flink-java .../operators/DeltaIteration.java —
-  * Flink keeps the solution set partitioned by key and ships only the
-  * workset; SURVEY.md §2.13 iterations row).
+/** Co-partitioned vertex iteration, graft's one iteration engine
+  * (reference flink-java .../operators/DeltaIteration.java — Flink keeps
+  * the solution set partitioned by key and ships only the workset;
+  * SURVEY.md §2.13 iterations row). q_pagerank, q_bfs_levels and
+  * [[ConnectedComponents]] run on it.
   *
   * The symmetric adjacency lists are built ONCE ([[adjacency]]),
   * hash-partitioned by vertex id and persisted; the vertex state lives
@@ -27,6 +28,12 @@ import org.apache.spark.storage.StorageLevel
   *  2. each state partition merges its inbox by vertex id and is pinned
   *     through [[Materialize.pinRdd]]; the pin job's action is the
   *     round's change count, the one scalar that reaches the driver.
+  *
+  * A program that asks for the hop (`Program.hops`, pointer jumping)
+  * adds two shuffles of the same packed blocks to that job: each vertex
+  * whose value names another vertex sends it a request, and the named
+  * vertex's reply — its value before the round — joins the requester's
+  * inbox through `combine`.
   *
   * No Catalyst plan is analyzed, optimized or AQE-replanned per round:
   * on a small graph the Catalyst round (broadcast build job, shuffle-map
@@ -61,6 +68,10 @@ object VertexLoop {
     /** The vertex's next value, given its combined inbox (None when no
       * message arrived). */
     def update(value: Long, inbox: Option[Long]): Long
+    /** Whether each vertex whose value is the id of another vertex also
+      * receives that vertex's value (as it stood before the round) in
+      * its inbox. */
+    def hops: Boolean = false
   }
 
   private final case class Vertex(value: Long, changed: Boolean)
@@ -86,8 +97,7 @@ object VertexLoop {
       rows.foreach { r =>
         add(r.getLong(0), r.getLong(1)); add(r.getLong(1), r.getLong(0))
       }
-      out.iterator.map(_.result()).zipWithIndex.collect {
-        case (o, p) if o.nonEmpty => p -> o }
+      packed(out)
     }
     exchange(routed, part.numPartitions).mapPartitions({ blocks =>
       val nbrs = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
@@ -103,7 +113,7 @@ object VertexLoop {
     * to [1, defaultParallelism] — each partition is a task in every
     * round, so a small graph runs a handful of tasks per round and a
     * large one the full width. */
-  private[ext] def sizedWidth(df: DataFrame): Int = {
+  private def sizedWidth(df: DataFrame): Int = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val para = df.sparkSession.sparkContext.defaultParallelism
     math.max(1L, math.min(para.toLong, (est / (2L << 20)).toLong)).toInt
@@ -116,6 +126,13 @@ object VertexLoop {
   private def exchange(buckets: RDD[(Int, Array[Long])], n: Int)
       : RDD[(Int, Array[Long])] =
     new ShuffledRDD[Int, Array[Long], Array[Long]](buckets, new HashPartitioner(n))
+
+  /** The non-empty per-target builders of one map task as (target
+    * partition, packed pairs) blocks. */
+  private def packed(out: Array[mutable.ArrayBuilder.ofLong])
+      : Iterator[(Int, Array[Long])] =
+    out.iterator.map(_.result()).zipWithIndex.collect {
+      case (o, p) if o.nonEmpty => p -> o }
 
   private def foreachPair(blocks: Iterator[(Int, Array[Long])])
       (f: (Long, Long) => Unit): Unit =
@@ -179,13 +196,17 @@ object VertexLoop {
         }
       }
       out.iterator.zipWithIndex.collect { case (o, p) if o.nonEmpty =>
-        val packed = new mutable.ArrayBuilder.ofLong
-        o.foreach { case (d, m) => packed += d; packed += m }
-        p -> packed.result()
+        val pairs = new mutable.ArrayBuilder.ofLong
+        o.foreach { case (d, m) => pairs += d; pairs += m }
+        p -> pairs.result()
       }
     }
-    state.zipPartitions(exchange(sent, part.numPartitions),
-        preservesPartitioning = true) {
+    val messages = exchange(sent, part.numPartitions)
+    // both shuffles are partitioned alike, so the union keeps partition
+    // p of each in partition p (a PartitionerAwareUnionRDD)
+    val inboxes =
+      if (prog.hops) messages.union(hopReplies(state, part)) else messages
+    state.zipPartitions(inboxes, preservesPartitioning = true) {
       (vs, blocks) =>
         val inbox = mutable.LongMap.empty[Long]
         foreachPair(blocks) { (d, m) =>
@@ -195,5 +216,34 @@ object VertexLoop {
           id -> Vertex(next, next != v.value)
         }
     }
+  }
+
+  /** Replies to the hop requests of `state`: every vertex whose value
+    * names another vertex asks that vertex's partition for its value,
+    * and the reply (requester, value) goes back to the requester's
+    * partition. A request naming no vertex gets no reply. */
+  private def hopReplies(state: RDD[(Long, Vertex)], part: Partitioner)
+      : RDD[(Int, Array[Long])] = {
+    val n = part.numPartitions
+    val requests = state.mapPartitions { vs =>
+      val out = Array.fill(n)(new mutable.ArrayBuilder.ofLong)
+      vs.foreach { case (id, v) =>
+        if (v.value != id) {
+          val o = out(part.getPartition(v.value)); o += v.value; o += id
+        }
+      }
+      packed(out)
+    }
+    exchange(state.zipPartitions(exchange(requests, n)) { (vs, blocks) =>
+      val value = mutable.LongMap.empty[Long]
+      vs.foreach { case (id, v) => value(id) = v.value }
+      val out = Array.fill(n)(new mutable.ArrayBuilder.ofLong)
+      foreachPair(blocks) { (named, requester) =>
+        value.get(named).foreach { x =>
+          val o = out(part.getPartition(requester)); o += requester; o += x
+        }
+      }
+      packed(out)
+    }, n)
   }
 }

@@ -79,8 +79,8 @@ object ExtPack6 extends QueryPack {
     // Both engines' replace() are the same left-to-right
     // non-overlapping algorithm, so the oracle is bit-exact. The
     // per-round argmax is ONE collected row (merge decisions are
-    // inherently sequential global argmaxes — the same driver-scalar
-    // shape as Iterate's convergence reads).
+    // inherently sequential global argmaxes — one scalar per round
+    // reaches the driver, as VertexLoop's change count does).
     "q_bpe_train" -> ((s, d) => {
       val merges = trainMerges(s, d, rounds = 3)
       s.createDataFrame(merges).toDF("round", "pair", "cnt")

@@ -156,12 +156,7 @@ object SqlTextPack extends QueryPack {
     // (FusionRuleSpec's fan-out-off leg, graft.Probe fanab) must re-bind
     // the views to freshly built frames, not keep serving the plans
     // built under the previous setting
-    val key = d + (if (s.conf.get(graft.ext.FanOut.EnabledConf,
-      "true").toBoolean) "" else "#nofan") +
-      s.conf.getOption(graft.ext.FanOut.PartitionsConf)
-        .map("#p" + _).getOrElse("") +
-      s.conf.getOption(graft.ext.FanOut.TargetBytesConf)
-        .map("#t" + _).getOrElse("")
+    val key = graft.ext.FanOut.keyed(s, d)
     if (starRegistered.put(s, key) != key)
       buildStarViews(s, d)
   }

@@ -17,12 +17,6 @@ object GraftSqlBridge {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
 
-  /** The session's autoBroadcastJoinThreshold in bytes (-1 = broadcast
-    * disabled), already parsed by SQLConf — size-adaptive operators
-    * compare their own estimates against it. */
-  def autoBroadcastThreshold(spark: SparkSession): Long =
-    spark.sessionState.conf.autoBroadcastJoinThreshold
-
   /** Blocks until every listener-bus event posted so far has been
     * delivered (`listenerBus` is private[spark]). Job and SQL-execution
     * events are posted before the action that caused them returns, so

@@ -87,6 +87,21 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(got.length == 200 && got.forall(_._2 == 0L))
   }
 
+  test("ConnectedComponents takes integral ids of any width and rejects others") {
+    import graft.ext.ConnectedComponents
+    val got = ConnectedComponents.run(Seq(1, 2, 3).toDF("id"),
+        Seq((2.toShort, 3.toShort)).toDF("a", "b"))
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
+    // 1.2 and 1.7 would both read as vertex 1 if the ids were cast
+    val e = intercept[IllegalArgumentException](ConnectedComponents.run(
+      Seq(1.2, 1.7).toDF("id"), Seq((1.2, 1.7)).toDF("a", "b")))
+    assert(e.getMessage.contains("nodes.id is double"))
+    val e2 = intercept[IllegalArgumentException](ConnectedComponents.run(
+      Seq(1L).toDF("id"), Seq((1L, "x")).toDF("a", "b")))
+    assert(e2.getMessage.contains("edges.b is string"))
+  }
+
   test("clusters merges chained near-dups that one-hop rep assignment splits") {
     // A~B and B~C near-dups; A and C share little directly. The cluster
     // form must put all three in one group keyed by the min doc id.

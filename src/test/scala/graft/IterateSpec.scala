@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.ext.{Iterate, Materialize, VertexLoop}
+import graft.ext.{ConnectedComponents, Materialize, VertexLoop}
 import graft.operators.IteratePack
 import org.apache.spark.HashPartitioner
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -11,13 +11,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Counts evaluations of the reordering adjacency in the order-
-  * independence test (local mode: tasks run in this JVM). */
+  * independence tests (local mode: tasks run in this JVM). */
 object AdjacencyEvaluations { val count = new AtomicInteger }
 
-/** graft.ext.Iterate (bounded DataFrame iteration) and graft.ext.VertexLoop
-  * (the co-partitioned vertex loop behind q_pagerank / q_bfs_levels);
-  * reference IterativeStream.java / IterativeDataSet.java /
-  * DeltaIteration.java, SURVEY §2.13 iterations row.
+/** graft.ext.VertexLoop, the co-partitioned vertex loop behind
+  * q_pagerank, q_bfs_levels and ConnectedComponents (q_dedup_clusters);
+  * reference DeltaIteration.java, SURVEY §2.13 iterations row.
   */
 class IterateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -29,20 +28,20 @@ class IterateSpec extends AnyFunSuite {
     n.get()
   }
 
-  test("vertex loop cadence: q_bfs_levels and q_pagerank run exactly " +
-      "one job per round plus a fixed set-up, and keep only the final " +
-      "round pinned") {
-    val sc = spark.sparkContext
-    val group = "vertex-loop-cadence"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
+  /** Counts the jobs of job group `group` while a [[withJobCount]] body
+    * runs. */
+  private final class JobCount(group: String) {
+    private val jobs = new AtomicInteger
+    val listener: SparkListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties.getProperty("spark.jobGroup.id") == group)
           jobs.incrementAndGet(): Unit
     }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "vertex loop job cadence")
-    def jobsOf[A](body: => A): (A, Int) = {
+
+    /** `body`'s result and the jobs it ran; asserts that it leaves
+      * exactly one new persisted RDD, the final round's pin. */
+    def apply[A](body: => A): (A, Int) = {
+      val sc = spark.sparkContext
       val before = quiesce(jobs)
       val pinsBefore = sc.getPersistentRDDs.keySet
       val out = body
@@ -52,7 +51,23 @@ class IterateSpec extends AnyFunSuite {
         "round leaked)")
       (out, quiesce(jobs) - before)
     }
-    try {
+  }
+
+  private def withJobCount(group: String)(body: JobCount => Unit): Unit = {
+    val sc = spark.sparkContext
+    val count = new JobCount(group)
+    sc.addSparkListener(count.listener)
+    sc.setJobGroup(group, "vertex loop job cadence")
+    try body(count) finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(count.listener)
+    }
+  }
+
+  test("vertex loop cadence: q_bfs_levels and q_pagerank run exactly " +
+      "one job per round plus a fixed set-up, and keep only the final " +
+      "round pinned") {
+    withJobCount("vertex-loop-cadence") { jobsOf =>
       // the first read of a parquet table infers its schema with a job
       // of its own; the session memoizes the frame, so take that first
       Tables.lineitemRaw(spark, TestSpark.sf)
@@ -70,26 +85,34 @@ class IterateSpec extends AnyFunSuite {
       assert(prJobs == prRounds,
         s"PageRank ran $prJobs jobs for $prRounds rounds (expected rounds)")
       assert(bfs.count() > 0 && pr.count() > 0)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 
-  test("vertex loop merges by key: adjacency partitions recomputed in " +
-      "another row order every round give the same BFS and PageRank") {
+  test("connected components cadence: one job per round, only the final " +
+      "round pinned") {
     val sp = spark
-    val rnd = new scala.util.Random(11)
-    val n = 300
-    // plus a separate 3-node path, which BFS from the minimum id never
-    // reaches
-    val edges = Seq.fill(700)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b } ++ Seq((1000L, 1001L), (1001L, 1002L))
-    val nbrs: Map[Long, Array[Long]] = (edges ++ edges.map(_.swap))
-      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).distinct.toArray }
-    // NOT persisted: every round recomputes every adjacency partition,
-    // and each evaluation rotates its rows and flips neighbour order
-    val adj = sp.sparkContext.parallelize(nbrs.toSeq, 3)
+    import sp.implicits._
+    // a 64-node path (shuffled ids) takes several pointer-doubling
+    // rounds; local frames, so building the adjacency plans no exchange
+    // and the set-up runs no job of its own: round 1's job builds it
+    val ids = new scala.util.Random(5).shuffle((0L until 64L).toVector)
+    val nodes = ids.toDF("id")
+    val edges = ids.zip(ids.tail).toDF("a", "b")
+    withJobCount("cc-cadence") { jobsOf =>
+      val ((cc, rounds), jobs) =
+        jobsOf(ConnectedComponents.components(nodes, edges, 30))
+      assert(rounds >= 3, s"a 64-path converged in $rounds rounds")
+      assert(jobs == rounds,
+        s"CC ran $jobs jobs for $rounds rounds (expected rounds)")
+      assert(cc.as[(Long, Long)].collect().toSet == ids.map(_ -> 0L).toSet)
+    }
+  }
+
+  /** An adjacency over `nbrs` that is NOT persisted: every round
+    * recomputes every partition, and each evaluation rotates its rows
+    * and flips neighbour order. */
+  private def reordering(nbrs: Map[Long, Array[Long]]) =
+    spark.sparkContext.parallelize(nbrs.toSeq, 3)
       .partitionBy(new HashPartitioner(4))
       .mapPartitions({ it =>
         val rows = it.toArray
@@ -98,6 +121,29 @@ class IterateSpec extends AnyFunSuite {
         (rows.drop(cut) ++ rows.take(cut)).iterator.map { case (v, ns) =>
           v -> (if (k % 2 == 0) ns.reverse else ns) }
       }, preservesPartitioning = true)
+
+  /** `prog`'s values over a [[reordering]] adjacency, checking that every
+    * round recomputed its 4 partitions. */
+  private def runReordered(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
+      prog: VertexLoop.Program, rounds: Int): Map[Long, Long] = {
+    val before = AdjacencyEvaluations.count.get()
+    val (out, ran, _) = VertexLoop.run(spark, adj, prog, rounds, "v")
+    assert(AdjacencyEvaluations.count.get() - before >= ran * 4,
+      "adjacency partitions were not recomputed every round")
+    out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("vertex loop merges by key: adjacency partitions recomputed in " +
+      "another row order every round give the same BFS and PageRank") {
+    val rnd = new scala.util.Random(11)
+    val n = 300
+    // plus a separate 3-node path, which BFS from the minimum id never
+    // reaches
+    val edges = Seq.fill(700)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (a, b) => a != b } ++ Seq((1000L, 1001L), (1001L, 1002L))
+    val nbrs: Map[Long, Array[Long]] = (edges ++ edges.map(_.swap))
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).distinct.toArray }
+    val adj = reordering(nbrs)
 
     // plain-Scala references
     val seed = nbrs.keys.min
@@ -115,15 +161,29 @@ class IterateSpec extends AnyFunSuite {
         v -> (150000L + 17L * ns.map(u => rank(u) / nbrs(u).length).sum / 20L) }
     }
 
-    def run(prog: VertexLoop.Program, rounds: Int) = {
-      val before = AdjacencyEvaluations.count.get()
-      val (out, ran, _) = VertexLoop.run(sp, adj, prog, rounds, "v")
-      assert(AdjacencyEvaluations.count.get() - before >= ran * 4,
-        "adjacency partitions were not recomputed every round")
-      out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    assert(run(IteratePack.bfsProgram(seed), 50) == wantBfs)
-    assert(run(IteratePack.pageRankProgram, 10) == rank)
+    assert(runReordered(adj, IteratePack.bfsProgram(seed), 50) == wantBfs)
+    assert(runReordered(adj, IteratePack.pageRankProgram, 10) == rank)
+  }
+
+  test("connected components merge by key: adjacency partitions " +
+      "recomputed in another row order every round give the union-find " +
+      "components") {
+    val rnd = new scala.util.Random(12)
+    // sparse enough to leave many components, some of them long paths
+    val ids = rnd.shuffle((0L until 2000L).toVector).take(300)
+    val edges = Seq.fill(240)((ids(rnd.nextInt(300)), ids(rnd.nextInt(300))))
+      .filter { case (a, b) => a != b } ++
+      ids.take(40).zip(ids.slice(1, 40))
+    val nbrs: Map[Long, Array[Long]] = (edges ++ edges.map(_.swap))
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).distinct.toArray }
+    val parent = scala.collection.mutable.Map(nbrs.keys.map(v => v -> v).toSeq: _*)
+    def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
+    edges.foreach { case (a, b) => parent(find(a)) = find(b) }
+    val minOf = nbrs.keys.groupBy(find).map { case (r, vs) => r -> vs.min }
+    val want = nbrs.keys.map(v => v -> minOf(find(v))).toMap
+    assert(want.values.toSet.size > 10, "expected many components")
+    assert(runReordered(reordering(nbrs), ConnectedComponents.program, 30) ==
+      want)
   }
 
   test("q_bfs_levels and q_pagerank give identical rows with reliable " +
@@ -144,139 +204,4 @@ class IterateSpec extends AnyFunSuite {
     assert(wrote > 0, "expected reliable checkpoint files under the dir")
   }
 
-  test("loop runs exactly N rounds and threads the round number") {
-    val sp = spark
-    import sp.implicits._
-    val init = Seq((1L, 0L), (2L, 0L)).toDF("id", "acc")
-    // acc += round each round: after 12 rounds acc = 1+2+...+12 = 78.
-    // 12 rounds is past the plan-doubling blowup point an unpinned
-    // self-referencing loop hits (~round 10) — completing at all is
-    // the lineage-cut guarantee.
-    val out = Iterate.loop(init, 12) { (df, r) =>
-      df.select($"id", ($"acc" + r).as("acc"))
-    }
-    assert(out.orderBy("id").collect().map(_.getLong(1)).toSeq ==
-      Seq(78L, 78L))
-  }
-
-  test("q_bfs_levels: no per-round convergence scan — convergence is " +
-      "read off the pin job's Observation (one action per round, the " +
-      "ConnectedComponents contract)") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val extraActions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new QueryExecutionListener {
-      // the pre-r8 BFS ran an isEmpty join scan per round; any isEmpty
-      // (or stray collect) during the query is the regression
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        if (funcName == "isEmpty" || funcName == "collect")
-          extraActions.incrementAndGet(): Unit
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val n = SparkEntry.queries("q_bfs_levels")(spark, TestSpark.sf).count()
-      assert(n > 0)
-      GraftSqlBridge.awaitListeners(spark)
-      val cur = extraActions.get()
-      assert(cur == 0,
-        s"BFS ran $cur isEmpty/collect actions — per-round convergence " +
-          "scans crept back in")
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("loop with 0 rounds returns the (pinned) init unchanged") {
-    val sp = spark
-    import sp.implicits._
-    val init = Seq(5L).toDF("v")
-    assert(Iterate.loop(init, 0)((df, _) => df.limit(0)).count() == 1)
-  }
-
-  test("loopUntil stops at the fixpoint round with converged=true") {
-    val sp = spark
-    import sp.implicits._
-    // v -> min(v+1, 5): fixpoint 5 reached from 1 after 4 improving
-    // rounds; detected on the 5th (no change), well under the bound.
-    val init = Seq(1L).toDF("v")
-    val (out, rounds, converged) = Iterate.loopUntil(init, 50) { (df, _) =>
-      df.select(least($"v" + 1L, lit(5L)).as("v"))
-    } { (prev, next) =>
-      next.as("n").join(prev.as("p"), lit(true))
-        .filter($"n.v" =!= $"p.v").isEmpty
-    }
-    assert(converged)
-    assert(rounds == 5, s"expected detection on round 5, got $rounds")
-    assert(out.head.getLong(0) == 5L)
-  }
-
-  test("superseded rounds release their blocks: only the final pin " +
-      "remains registered") {
-    val sp = spark
-    import sp.implicits._
-    val before = sp.sparkContext.getPersistentRDDs.keySet
-    val out = Iterate.loop(Seq(1L).toDF("v"), 6) { (df, _) =>
-      df.select(($"v" + 1L).as("v"))
-    }
-    val added = sp.sparkContext.getPersistentRDDs.keySet -- before
-    // init pin + 6 round pins ran; 6 were superseded and released
-    assert(added.size == 1,
-      s"expected exactly the final round's RDD to stay pinned, " +
-        s"found ${added.size}")
-    assert(out.head.getLong(0) == 7L)
-  }
-
-  test("smallSide: broadcast under the threshold, shuffle_hash above " +
-      "it (the iterative-join size switch)") {
-    val sp = spark
-    import sp.implicits._
-    val a = Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
-    val b = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("id", "w")
-    def planOf(small: org.apache.spark.sql.DataFrame) =
-      small.join(b, "id").queryExecution.executedPlan.toString
-    // 2 rows × 64 B is far under the default 10 MB threshold
-    val smallPlan = planOf(Iterate.smallSide(a, 2))
-    assert(smallPlan.contains("BroadcastHashJoin"), smallPlan)
-    // an estimate that cannot fit any threshold must switch the hint
-    val bigPlan = planOf(Iterate.smallSide(a, Long.MaxValue / 128))
-    assert(bigPlan.contains("ShuffledHashJoin"), bigPlan)
-    assert(!bigPlan.contains("BroadcastHashJoin"), bigPlan)
-    // broadcast disabled entirely (-1) must also take the shuffle path
-    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = sp.conf.get(thrKey)
-    try {
-      sp.conf.set(thrKey, "-1")
-      val offPlan = planOf(Iterate.smallSide(a, 2))
-      assert(offPlan.contains("ShuffledHashJoin"), offPlan)
-    } finally sp.conf.set(thrKey, saved)
-  }
-
-  test("q_pagerank is bit-identical under the shuffle_hash regime " +
-      "(broadcast disabled): the size switch changes the plan, " +
-      "never the answer") {
-    val sp = spark
-    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = sp.conf.get(thrKey)
-    val broadcastRun = SparkEntry.queries("q_pagerank")(sp, TestSpark.sf)
-      .collect().map(_.toString).sorted
-    val shuffleRun = try {
-      sp.conf.set(thrKey, "-1")
-      SparkEntry.queries("q_pagerank")(sp, TestSpark.sf)
-        .collect().map(_.toString).sorted
-    } finally sp.conf.set(thrKey, saved)
-    assert(broadcastRun.length > 0)
-    assert(broadcastRun.toSeq == shuffleRun.toSeq,
-      "rank table differs between broadcast and shuffle_hash regimes")
-  }
-
-  test("loopUntil reports converged=false when the bound cuts it off") {
-    val sp = spark
-    import sp.implicits._
-    val init = Seq(0L).toDF("v")
-    val (out, rounds, converged) = Iterate.loopUntil(init, 3) { (df, _) =>
-      df.select(($"v" + 1L).as("v"))
-    } { (_, _) => false }
-    assert(!converged && rounds == 3 && out.head.getLong(0) == 3L)
-  }
 }

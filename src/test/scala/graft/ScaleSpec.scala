@@ -313,48 +313,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(viaPs == viaWin)
   }
 
-  test("connected components: exactly one action per round " +
-      "(convergence folded into the pin via Dataset.observe)") {
-    import graft.ext.ConnectedComponents
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    // a 16-chain forces several pointer-doubling rounds; count every
-    // Dataset ACTION run() launches (under AQE one action fans out
-    // into per-stage jobs, so job counts can't see the doubling — the
-    // unit that matters is actions: each is a full pass over the data)
-    val actions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        if (funcName == "localCheckpoint" || funcName == "checkpoint" ||
-            funcName == "isEmpty" || funcName == "count")
-          actions.incrementAndGet(): Unit
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val nodes = (0L until 16L).toDF("id")
-      val edges = (0L until 15L).map(i => (i, i + 1)).toDF("a", "b")
-      val cc = ConnectedComponents.run(nodes, edges)
-        .as[(Long, Long)].collect()
-      assert(cc.length == 16 && cc.forall(_._2 == 0L))
-      val rounds = ConnectedComponents.lastRunRounds
-      assert(rounds >= 2, s"chain-16 should take multiple rounds, got $rounds")
-      // the listener bus is async: drain it before reading the count
-      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
-      val cur = actions.get()
-      // actions = 1 initial-labels pin + 1 up-front label count (r16:
-      // feeds the per-round join-strategy hint — constant across
-      // rounds, NOT per-round) + 1 pin per round; the pre-r8 code paid
-      // 2 per round (pin + isEmpty convergence scan)
-      assert(cur == rounds + 2,
-        s"expected ${rounds + 2} actions (init pin + size count + " +
-          s"$rounds round pins), saw $cur — a second per-round action " +
-          "crept back in")
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("reliable checkpoint mode: iterative ops survive with checkpoint()") {
     import graft.ext.{ConnectedComponents, Materialize, PrefixSum}
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
